@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Json.fmt
 
 /** Driver-run benchmark: one JSON line with per-query steady-state seconds.
   *
@@ -21,17 +21,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    // ERROR: freeing local checkpoints between runs (below) emits a WARN per
-    // RDD that would otherwise flood the bench log
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
@@ -104,8 +94,6 @@ object Bench {
     // under 1900 chars; whatever doesn't fit is summed into "other" so the
     // per-query values still add up to the total. The full-name 3-decimal
     // map for all queries goes to BENCH_DETAIL.json for humans and diffs.
-    def fmt(v: Double, scale: Int): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
     val total = results.map(_.sec).filter(_ >= 0).sum
     // n_queries/n_failed: the driver's stdout tail window is 2000 chars
     // (verified from the captured BENCH_r13 tail), so the per-query map

@@ -2,13 +2,16 @@ package graft
 
 import graft.functions.catalyst.{ApproxTopK, ArrayDotProduct, ArrayL2Normalize, BloomCountContained, BloomMightContain, BloomPositions, JavaSplit, WordShingles}
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Session extensions installing the engine's native Catalyst functions,
-  * for `spark.sql` users:
-  * {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}} */
+/** Session extensions installing the engine's 8 native Catalyst functions
+  * under their SQL names and the as-of join planner strategy. [[Session]]
+  * installs them on every session it builds; another builder adds them
+  * with {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
+  * The DataFrame API builds the Catalyst nodes directly and needs no
+  * SQL name. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
     e.injectFunction((
@@ -111,31 +114,5 @@ object GraftFunctions {
     val sig = "graft_bloom_count(keys, words, k)"
     arity(exprs, 3, sig)
     BloomCountContained(exprs.head, exprs(1), constInt(exprs(2), "k", sig))
-  }
-
-  /** Idempotent per-session registration, for sessions not built with
-    * [[GraftExtensions]] (e.g. the driver-owned Verify/Bench sessions).
-    * Truly once per session: re-registering on every call spams
-    * "replaced a previously registered function" warnings from the
-    * function registry. */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    // per-function existence check: gating the whole block on one function
-    // would leave later-added functions unregistered in sessions that
-    // already carry the earlier set
-    def reg1(name: String, builder: Seq[Expression] => Expression): Unit =
-      if (!reg.functionExists(FunctionIdentifier(name)))
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-    reg1("graft_dot", buildDot)
-    reg1("graft_shingles", buildShingles)
-    reg1("graft_topk", buildTopK)
-    reg1("graft_l2normalize", buildL2Normalize)
-    reg1("graft_java_split", buildJavaSplit)
-    reg1("graft_bloom_positions", buildBloomPositions)
-    reg1("graft_bloom_contains", buildBloomContains)
-    reg1("graft_bloom_count", buildBloomCount)
-    if (!spark.experimental.extraStrategies.contains(graft.plans.AsOfJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ graft.plans.AsOfJoinStrategy
   }
 }

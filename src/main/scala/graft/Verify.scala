@@ -1,4 +1,5 @@
 package graft
+import graft.util.Json.fmt
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -23,21 +24,9 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     new java.io.File(outDir).mkdirs()
     def q(s: String): String = graft.util.Json.quote(s)
-    // locale-safe decimal formatting (Bench's fmt): "%.2f".format uses the
-    // JVM default locale, and a comma-decimal locale would emit invalid
-    // JSON — the artifact-zeroing failure class this file exists to prevent
-    def fmt(v: Double, scale: Int): String =
-      BigDecimal(v).setScale(scale, BigDecimal.RoundingMode.HALF_UP).toString
     val progressPath = Paths.get(s"$outDir/verify_progress.jsonl")
     Files.deleteIfExists(progressPath)
     def logProgress(line: String): Unit = synchronized {

@@ -123,6 +123,17 @@ object Text {
     GraftBridge.column(graft.functions.catalyst.WordShingles(GraftBridge.expr(text), n))
   }
 
+  /** Aggregate: the `k` most frequent values of a string column as
+    * `array<struct<item, count, err>>`, through the native SpaceSaving sketch
+    * [[graft.functions.catalyst.ApproxTopK]] with `capacity` counters
+    * (exact whenever distinct values ≤ capacity). Direct Catalyst node — no
+    * session registration needed. */
+  def approxTopK(words: Column, k: Int, capacity: Int): Column = {
+    import org.apache.spark.sql.classic.GraftBridge
+    GraftBridge.column(graft.functions.catalyst.ApproxTopK(
+      GraftBridge.expr(words), k, capacity).toAggregateExpression())
+  }
+
   /** Contiguous word n-gram shingles ("a b c", n=2 → ["a b", "b c"]).
     * Documents shorter than n words get their whole text as one shingle.
     * Pure-builtin reference form of [[fastWordShingles]]. */

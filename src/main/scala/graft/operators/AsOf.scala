@@ -84,7 +84,7 @@ object AsOf {
                  leftKey: String, rightKey: String,
                  leftTs: String, rightTs: String): DataFrame = {
     val spark = left.sparkSession
-    graft.GraftFunctions.ensureRegistered(spark)
+    graft.plans.AsOfJoinStrategy.setup(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, name: String) =

@@ -37,9 +37,9 @@ object Dedup {
     * instead of the raw n-gram string: a word trigram averages ~25 UTF-8
     * bytes plus string header/offset overhead in the shuffle format where
     * the hashed key is a fixed 8. Measured on the posting aggregation
-    * (tools/ShuffleProbe, sf0.1): 1.75 → 1.41 MiB shuffled (−20% — LZ4
-    * compresses repeated shingle text, so the wire saving is smaller than
-    * the raw 3×) and 1.25 → 1.17 s warm (long-key hashing/sorting beats
+    * (tools/ShuffleProbe, sf0.1; the tool is in git history at 7dae035):
+    * 1.75 → 1.41 MiB shuffled (−20% — LZ4 compresses repeated shingle
+    * text, so the wire saving is smaller than the raw 3×) and 1.25 → 1.17 s warm (long-key hashing/sorting beats
     * string comparison in the exchange). At cluster scale the uncompressed
     * form is what sits in shuffle-sort buffers and spill files, so the
     * in-memory saving tracks the raw ~3×, not the wire −20%.
@@ -99,7 +99,6 @@ object Dedup {
                           shingleLen: Int, k: Int): DataFrame = {
     require(k >= 1, s"minhash needs k >= 1, got $k")
     require(k <= 64, s"two-hash family overflow bound: k must be <= 64, got $k")
-    graft.GraftFunctions.ensureRegistered(docs.sparkSession)
     val h = md5(col("sh"))
     // spreadRead: the per-shingle md5 fan-out is scan-stage CPU (§2.5)
     val ex = graft.sources.Tables.spreadRead(docs).select(col(idCol).as("id"),
@@ -674,7 +673,6 @@ object Dedup {
                          idCol: String, textCol: String,
                          shingleLen: Int = 3, threshold: Double = 0.5,
                          maxShingleDf: Int = 50): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(corpus.sparkSession)
     // hash each distinct shingle to the 8-byte key BEFORE any shuffle: the
     // md5 runs map-side on the exploded rows, and everything downstream
     // (stop-set, anti-joins, the bipartite equi-join, probe sizes) moves
@@ -730,7 +728,6 @@ object Dedup {
                               idCol: String, textCol: String,
                               shingleLen: Int = 3, threshold: Double = 0.5,
                               maxShingleDf: Int = 50, fpp: Double = 0.01): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(corpus.sparkSession)
     def shingled(df: DataFrame, as: String): DataFrame =
       graft.sources.Tables.spreadRead(df).select(
         col(idCol).as(as),
@@ -812,7 +809,6 @@ object Dedup {
   private def sharedShinglePairsReleasable(
       docs: DataFrame, idCol: String, textCol: String,
       shingleLen: Int, maxShingleDf: Int): (DataFrame, () => Unit) = {
-    graft.GraftFunctions.ensureRegistered(docs.sparkSession)
     // hash to the 8-byte key map-side (see [[shingleKey]]): the posting
     // aggregation — profiled at ~half this query's time — shuffles fixed
     // 8-byte longs instead of raw n-gram strings; the df-bound and the

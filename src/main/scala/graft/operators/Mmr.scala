@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.GraftFunctions
 import graft.functions.Vectors
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -45,7 +44,6 @@ object Mmr {
                 vecCol: String, queryId: Long, k: Int,
                 checkpoint: Boolean = true): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    GraftFunctions.ensureRegistered(spark)
     def cut(df: DataFrame): DataFrame =
       if (checkpoint) df.localCheckpoint() else df
     def cosMicro(qn: String, cn: String, a: String, b: String) =

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.GraftFunctions
 import graft.functions.Vectors
 
 import org.apache.spark.sql.{Column, DataFrame}
@@ -33,7 +32,6 @@ object Similarity {
   def bruteForceTopK(queries: DataFrame, corpus: DataFrame,
                      idCol: String, vecCol: String, k: Int,
                      excludeSelf: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       Vectors.norm(col(vecCol)).as("qn")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"),
@@ -70,7 +68,6 @@ object Similarity {
               idCol: String, vecCol: String, k: Int,
               planes: Int = 8, tables: Int = 4, dim: Int = -1,
               multiprobe: Int = 0, queryDirected: Boolean = true): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     val d = if (dim > 0) dim else Vectors.dims(corpus, vecCol)
     require(d > 0, s"cannot infer embedding dimensionality of '$vecCol' (no non-empty vectors); pass dim explicitly")
     val cands = lshCandidates(queries, corpus, idCol, vecCol,
@@ -204,7 +201,6 @@ object Similarity {
                     miniBatchFraction: Double = 1.0): IvfIndex = {
     require(miniBatchFraction > 0.0 && miniBatchFraction <= 1.0,
       s"miniBatchFraction must be in (0,1], got $miniBatchFraction")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
 
     // work on L2-normalized copies: dot ≡ cosine, means stay meaningful
     val c = corpus.select(col(idCol).as("cid_"), Vectors.l2normalize(col(vecCol)).as("nv"))
@@ -287,7 +283,6 @@ object Similarity {
   def searchIvfIndex(queries: DataFrame, index: IvfIndex,
                      idCol: String, vecCol: String, k: Int,
                      probes: Int = 4): DataFrame = {
-    GraftFunctions.ensureRegistered(queries.sparkSession)
     def centroidCol(v: Array[Double]): Column = array(v.map(lit(_)): _*)
     val scoreStructs: Seq[Column] = index.centroids.map { case (cl, v) =>
       struct(Vectors.fastDot(col("qnv"), centroidCol(v)).as("score"), lit(-cl).as("negc"))
@@ -389,7 +384,6 @@ object Similarity {
     * an equi-join on short bucket strings. */
   def embeddingNearDup(corpus: DataFrame, idCol: String, vecCol: String,
                        threshold: Double, planes: Int = 6, dim: Int = -1): DataFrame = {
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val d = if (dim > 0) dim else Vectors.dims(corpus, vecCol)
     require(d > 0, s"cannot infer embedding dimensionality of '$vecCol' (no non-empty vectors); pass dim explicitly")
     val b = corpus.select(col(idCol).as("id"), col(vecCol).as("v"),
@@ -446,7 +440,6 @@ object Similarity {
     * stay bit-comparable. */
   def randomProject(df: DataFrame, vecCol: String, outDim: Int,
                     planeSeed: Int = 7000, dim: Int = -1): DataFrame = {
-    GraftFunctions.ensureRegistered(df.sparkSession)
     require(outDim >= 1, s"outDim must be >= 1, got $outDim")
     val d = if (dim > 0) dim else Vectors.dims(df, vecCol)
     require(d > 0, s"cannot infer embedding dimensionality of '$vecCol'; pass dim explicitly")
@@ -485,7 +478,6 @@ object Similarity {
     * squared distance of the winner. */
   def bucketRepresentatives(df: DataFrame, idCol: String, vecCol: String,
                             planes: Int, dim: Int, seed: Int = 0): DataFrame = {
-    GraftFunctions.ensureRegistered(df.sparkSession)
     require(planes >= 1 && planes <= 24, s"planes must be in [1, 24], got $planes")
     require(dim >= 1, s"dim must be >= 1, got $dim")
     val base = df.select(col(idCol),
@@ -1149,7 +1141,6 @@ object Similarity {
                       planes: Int = -1, dim: Int = -1): DataFrame = {
     require(targetClusterSize >= 2,
       s"targetClusterSize must be >= 2, got $targetClusterSize")
-    GraftFunctions.ensureRegistered(corpus.sparkSession)
     val n = corpus.count()
     if (n == 0L) // the coarse-fine empty-corpus contract
       return corpus.select(col(idCol).cast("long").as(idCol),

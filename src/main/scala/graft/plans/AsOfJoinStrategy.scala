@@ -1,15 +1,22 @@
 package graft.plans
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
 /** Plans the logical [[AsOfJoinPlan]] as the merge-based [[AsOfJoinExec]].
-  * Injected via [[graft.GraftExtensions]] (or per-session through
-  * `spark.experimental.extraStrategies`). */
+  * Injected via [[graft.GraftExtensions]]; [[setup]] adds it to a session
+  * built without them. */
 object AsOfJoinStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case AsOfJoinPlan(l, r, lk, rk, lt, rt) =>
       AsOfJoinExec(planLater(l), planLater(r), lk, rk, lt, rt) :: Nil
     case _ => Nil
   }
+
+  /** Idempotent per-session install through
+    * `spark.experimental.extraStrategies`. */
+  def setup(spark: SparkSession): Unit =
+    if (!spark.experimental.extraStrategies.contains(this))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ this
 }

@@ -284,10 +284,9 @@ private[graft] trait QueriesCore { this: SparkEntry.type =>
     * is provably exact — hash-checkable against the exact oracle; the
     * approximate regime is covered by the spec's error-bound assertions. */
   protected def q38(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .select(explode(Text.tokens(col("text"))).as("w"))
-      .agg(call_function("graft_topk", col("w"), lit(20), lit(4096)).as("tk"))
+      .agg(Text.approxTopK(col("w"), 20, 4096).as("tk"))
       .select(explode(col("tk")).as("t"))
       .select(col("t.item").as("word"), col("t.count").as("cnt"))
       .orderBy(col("cnt").desc, col("word"))
@@ -478,11 +477,10 @@ private[graft] trait QueriesCore { this: SparkEntry.type =>
     * per-lang vocab here, the provably-exact regime, so the oracle is the
     * exact per-group top-10. */
   protected def q99(s: SparkSession, dir: String): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(s)
     Tables.documents(s, dir)
       .select(col("lang"), explode(Text.tokens(col("text"))).as("w"))
       .groupBy(col("lang"))
-      .agg(call_function("graft_topk", col("w"), lit(10), lit(4096)).as("tk"))
+      .agg(Text.approxTopK(col("w"), 10, 4096).as("tk"))
       .select(col("lang"), explode(col("tk")).as("t"))
       .select(col("lang"), col("t.item").as("word"), col("t.count").as("cnt"))
       .orderBy(col("lang"), col("cnt").desc, col("word"))

@@ -144,7 +144,6 @@ object Streams {
     * a streaming frame; state is one signature string per in-horizon doc. */
   def dedupStreamNearDup(docs: DataFrame, textCol: String, tsCol: String,
                          delay: String, shingleLen: Int = 3, k: Int = 16): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(docs.sparkSession)
     docs
       .withColumn("_sig", concat_ws("|",
         graft.operators.Dedup.minHashSignature(
@@ -180,7 +179,6 @@ object Streams {
   def decontaminateStream(docs: DataFrame, idCol: String, textCol: String,
                           bloom: graft.operators.BloomModel,
                           shingleLen: Int = 3, minShared: Int = 1): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(docs.sparkSession)
     val keys = transform(
       array_distinct(graft.functions.Text.fastWordShingles(col(textCol), shingleLen)),
       s => graft.operators.Dedup.shingleKey(s))
@@ -234,7 +232,6 @@ object Streams {
   def noveltyStream(docs: DataFrame, textCol: String,
                     sharedBloom: graft.operators.BloomModel,
                     shingleLen: Int = 3): DataFrame = {
-    graft.GraftFunctions.ensureRegistered(docs.sparkSession)
     val keys = transform(
       array_distinct(graft.functions.Text.fastWordShingles(col(textCol), shingleLen)),
       s => graft.operators.Dedup.shingleKey(s))
@@ -274,7 +271,6 @@ object Streams {
                              bandBloom: graft.operators.BloomModel,
                              shingleLen: Int = 3, k: Int = 16, bands: Int = 4): DataFrame = {
     import graft.operators.Dedup
-    graft.GraftFunctions.ensureRegistered(docs.sparkSession)
     val fpKey = Dedup.shingleKey(graft.functions.Text.fingerprint(col(textCol)))
     val bandKeys = transform(
       Dedup.minHashBandKeysPerRow(col(textCol), shingleLen, k, bands),

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.SparkEntry
 
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool: dump formatted physical plans for plan-quality review.
   * Usage: sbt "runMain graft.tools.Explain <sfDir> [query...]" */
@@ -10,13 +9,7 @@ object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq else SparkEntry.queries.keys.toSeq.sorted
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(8)
     names.foreach { n =>
       println(s"\n================ $n ================")
       try SparkEntry.queries(n)(spark, dir).explain("formatted")

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.operators.Dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Pathological-component stress for the frontier label propagation
@@ -34,12 +34,7 @@ object FrontierStress {
     val starSpokes = if (args.length > 2) args(2).toLong else 100000L
     require(chainLen < 20, "chain diameter must stay under the default maxIterations")
 
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
 
     // id layout (all disjoint): background pairs start at 1000, the chain
     // occupies [0, chainLen], the star hub is MAXSTAR with spokes below it

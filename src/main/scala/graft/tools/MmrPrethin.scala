@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Pre-thin FIDELITY for the q270 shape: how many of the k = 5 MMR
@@ -24,11 +23,7 @@ import org.apache.spark.sql.functions._
 object MmrPrethin {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: MmrPrethin <sfDir> [...]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
     val k = 5
     def fm(v: Double, s: Int): String =
       BigDecimal(v).setScale(s, BigDecimal.RoundingMode.HALF_UP).toString

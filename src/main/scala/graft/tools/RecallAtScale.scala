@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.operators.Similarity
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Recall-at-scale evidence for the approximate ANN paths (q22 LSH,
@@ -58,12 +57,7 @@ object RecallAtScale {
 
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
 
     var failed = false
     dirs.foreach { dir =>

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scale-up for scale-smoke runs: replicate the sf0.1
@@ -31,12 +31,7 @@ object ScaleUp {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val dst = if (args.length > 1) args(1) else "/tmp/sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local(32)
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Scale evidence for [[graft.operators.Similarity.semDedupAutoK]] — the
   * k ∝ n regime: times the auto-k run on each given embeddings dir and
@@ -14,11 +13,7 @@ import org.apache.spark.sql.SparkSession
 object SemDedupScale {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SemDedupScale <sfDir> [...]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local(32)
     args.foreach { dir =>
       val emb = graft.sources.Tables.embeddings(spark, dir)
       val n = emb.count()

@@ -63,7 +63,6 @@ object AlgebraProps extends Properties("graft.algebra") {
   property("native WordShingles == builtin HOF shingles on arbitrary text") =
     forAll(Gen.listOfN(12, Gen.oneOf("fox", "the", "a", " ", "  ", "\t", "b,c", "Ün", ""))) { parts =>
       import org.apache.spark.sql.functions._
-      graft.GraftFunctions.ensureRegistered(spark)
       val df = spark.createDataFrame(Seq(Tuple1(parts.mkString(" ")))).toDF("text")
       val native = df.select(graft.functions.Text.fastWordShingles(col("text"), 3)).head().getSeq[String](0)
       val builtin = df.select(graft.functions.Text.wordShingles(col("text"), 3)).head().getSeq[String](0)
@@ -73,7 +72,6 @@ object AlgebraProps extends Properties("graft.algebra") {
   property("codegen'd graft_dot == builtin HOF dot, bit-identical") =
     forAll(Gen.listOfN(16, Gen.chooseNum(-1e3f, 1e3f)), Gen.listOfN(16, Gen.chooseNum(-1e3f, 1e3f))) { (a, b) =>
       import org.apache.spark.sql.functions._
-      graft.GraftFunctions.ensureRegistered(spark)
       val df = spark.createDataFrame(Seq((a.toArray, b.toArray))).toDF("a", "b")
       val fast = df.select(graft.functions.Vectors.fastDot(col("a"), col("b"))).head().getDouble(0)
       val slow = df.select(graft.functions.Vectors.dot(col("a"), col("b"))).head().getDouble(0)

@@ -233,7 +233,6 @@ class OperatorsDedupSpec extends SparkSuite with DocsWithDupsFixture {
   }
 
   test("bloom expressions work from SQL after registration") {
-    GraftFunctions.ensureRegistered(spark)
     // build positions via SQL, probe via SQL, against the Scala-built model
     val pos = spark.sql(
       "SELECT graft_bloom_positions(CAST(42 AS BIGINT), 640, 3) AS p")

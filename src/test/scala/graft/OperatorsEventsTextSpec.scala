@@ -134,7 +134,6 @@ class OperatorsEventsTextSpec extends SparkSuite with DocsWithDupsFixture {
 
   test("SpaceSaving top-k sketch: exact when capacity >= distinct; bounded error under eviction") {
     import spark.implicits._
-    graft.GraftFunctions.ensureRegistered(spark)
     // skewed stream: item i appears (i+1)*10 times, i in 0..9
     val rows = (0 until 10).flatMap(i => Seq.fill((i + 1) * 10)(s"item$i"))
     val df = spark.createDataset(rows).toDF("w").repartition(8)
@@ -159,7 +158,6 @@ class OperatorsEventsTextSpec extends SparkSuite with DocsWithDupsFixture {
 
   test("grouped SpaceSaving: one exact sketch per group, map-side partial aggregation") {
     import spark.implicits._
-    graft.GraftFunctions.ensureRegistered(spark)
     // group A: a×5, b×3, c×3, d×1 — tie at the k=2 boundary resolves
     // (count desc, item asc) → b beats c; group B: disjoint vocabulary
     val rows = Seq.fill(5)(("A", "a")) ++ Seq.fill(3)(("A", "b")) ++

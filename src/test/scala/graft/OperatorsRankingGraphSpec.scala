@@ -154,7 +154,19 @@ class OperatorsRankingGraphSpec extends SparkSuite {
   }
 
   test("native functions usable from SQL after registration") {
-    graft.GraftFunctions.ensureRegistered(spark)
+    // GraftExtensions, installed by graft.Session at build, injects all 8
+    // SQL names and the as-of strategy; no spec registers anything itself
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    Seq("graft_dot", "graft_shingles", "graft_topk", "graft_l2normalize",
+      "graft_java_split", "graft_bloom_positions", "graft_bloom_contains",
+      "graft_bloom_count").foreach { name =>
+      assert(spark.sessionState.functionRegistry.functionExists(FunctionIdentifier(name)),
+        s"$name is not registered on the shared session")
+    }
+    // the DataFrame API's idempotent install of the as-of strategy
+    graft.plans.AsOfJoinStrategy.setup(spark)
+    graft.plans.AsOfJoinStrategy.setup(spark)
+    assert(spark.experimental.extraStrategies.count(_ == graft.plans.AsOfJoinStrategy) == 1)
     val d = spark.sql("SELECT graft_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d").head().getDouble(0)
     assert(d == 11.0)
     val sh = spark.sql("SELECT graft_shingles('The quick  Brown fox', 2) AS s").head().getSeq[String](0)

@@ -155,7 +155,6 @@ class OperatorsSimilaritySpec extends SparkSuite {
   }
 
   test("plan-time hyperplane lshBucket is bit-identical to the interpreted HOF formulation") {
-    graft.GraftFunctions.ensureRegistered(spark)
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val dim = Vectors.dims(emb, "embedding")
     (0 to 2).foreach { seed =>
@@ -168,7 +167,6 @@ class OperatorsSimilaritySpec extends SparkSuite {
   }
 
   test("LSH-blocked embedding near-dup: pairs are a subset of exact all-pairs, with real recall") {
-    graft.GraftFunctions.ensureRegistered(spark)
     val emb = spark.read.parquet(s"$sf0001/embeddings.parquet")
     val blocked = Similarity.embeddingNearDup(emb, "vec_id", "embedding", threshold = 0.35, planes = 6)
       .select(col("id_a"), col("id_b")).collect()
@@ -232,7 +230,6 @@ class OperatorsSimilaritySpec extends SparkSuite {
 
   test("vector functions: dot/norm/cosine/normalize on knowns") {
     import spark.implicits._
-    graft.GraftFunctions.ensureRegistered(spark)
     val df = Seq((Array(3.0f, 4.0f), Array(4.0f, 3.0f))).toDF("a", "b")
     assert(df.select(Vectors.dot($"a", $"b")).head().getDouble(0) == 24.0)
     assert(df.select(Vectors.norm($"a")).head().getDouble(0) == 5.0)
@@ -246,10 +243,13 @@ class OperatorsSimilaritySpec extends SparkSuite {
   }
 
   test("vector functions need no session registration (direct Catalyst nodes)") {
-    // a FRESH session whose registry has no graft functions: fastDot /
-    // normSq / l2normalize must still analyze (library users shouldn't need
-    // ensureRegistered unless they go through SQL strings)
+    // fastDot / normSq / l2normalize build their Catalyst nodes directly,
+    // never through a SQL name (the Column already holds the native node),
+    // so they analyze on any session, with or without GraftExtensions
+    import org.apache.spark.sql.classic.GraftBridge
     import spark.implicits._
+    assert(GraftBridge.expr(Vectors.fastDot(col("a"), col("b")))
+      .isInstanceOf[graft.functions.catalyst.ArrayDotProduct])
     val clean = spark.newSession()
     val df = clean.createDataset(Seq((Array(3.0f, 4.0f), Array(1.0f, 0.0f)))).toDF("a", "b")
     assert(df.select(Vectors.fastDot(col("a"), col("b"))).head().getDouble(0) == 3.0)

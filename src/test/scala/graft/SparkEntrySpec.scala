@@ -6,39 +6,33 @@ class SparkEntrySpec extends SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every query runs at sf0.001 and every oracle key has a query") {
-    val results = SparkEntry.queries.map { case (name, fn) =>
-      name -> fn(spark, sf0001).count()
-    }
-    // q06 (anti join) legitimately returns 0 at tiny scale; near-dup pair
-    // sets may be empty on the synthetic corpus — everything else must
-    // produce rows.
-    val allowEmpty = Set("q06_anti_join")
-    results.foreach { case (name, n) =>
-      assert(n >= 0)
-      if (!allowEmpty(name)) assert(n > 0, s"$name returned 0 rows")
-    }
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-  }
-
   test("suite-wide determinism: identical results under shuffle.partitions 4 vs 32") {
     // The oracle gate sees ONE run — it cannot catch a query whose result
     // depends on physical partitioning (float merge order, sketch merge
     // order, non-deterministic tiebreaks). This closes that suite-wide:
     // every query map entry, run under two different shuffle widths in the
-    // same session, must hash identically row-for-row.
-    def hashAll(parts: String): Map[String, String] = {
+    // same session, must hash identically row-for-row. The first sweep also
+    // checks that every query runs at sf0.001 and returns rows.
+    def hashAll(parts: String): Map[String, (String, Int)] = {
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       try SparkEntry.queries.map { case (name, fn) =>
         val md = java.security.MessageDigest.getInstance("MD5")
-        fn(spark, sf0001).collect().map(_.toString).sorted
-          .foreach(r => md.update(r.getBytes("UTF-8")))
-        name -> md.digest().map("%02x".format(_)).mkString
+        val rows = fn(spark, sf0001).collect()
+        rows.map(_.toString).sorted.foreach(r => md.update(r.getBytes("UTF-8")))
+        name -> (md.digest().map("%02x".format(_)).mkString, rows.length)
       } finally spark.conf.set("spark.sql.shuffle.partitions", "8")
     }
     val narrow = hashAll("4")
+    // q06 (anti join) legitimately returns 0 at tiny scale; everything else
+    // must produce rows
+    val allowEmpty = Set("q06_anti_join")
+    narrow.foreach { case (name, (_, n)) =>
+      assert(n >= 0)
+      if (!allowEmpty(name)) assert(n > 0, s"$name returned 0 rows")
+    }
+    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
     val wide = hashAll("32")
-    val diff = narrow.keys.filter(k => narrow(k) != wide(k)).toSeq.sorted
+    val diff = narrow.keys.filter(k => narrow(k)._1 != wide(k)._1).toSeq.sorted
     assert(diff.isEmpty, s"partitioning-sensitive results: ${diff.mkString(", ")}")
   }
 
