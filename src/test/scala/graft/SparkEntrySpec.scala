@@ -6,23 +6,24 @@ class SparkEntrySpec extends SparkSuite {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("suite-wide determinism: identical results under shuffle.partitions 4 vs 32") {
-    // The oracle gate sees ONE run — it cannot catch a query whose result
-    // depends on physical partitioning (float merge order, sketch merge
-    // order, non-deterministic tiebreaks). This closes that suite-wide:
-    // every query map entry, run under two different shuffle widths in the
-    // same session, must hash identically row-for-row. The first sweep also
-    // checks that every query runs at sf0.001 and returns rows.
-    def hashAll(parts: String): Map[String, (String, Int)] = {
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try SparkEntry.queries.map { case (name, fn) =>
-        val md = java.security.MessageDigest.getInstance("MD5")
-        val rows = fn(spark, sf0001).collect()
-        rows.map(_.toString).sorted.foreach(r => md.update(r.getBytes("UTF-8")))
-        name -> (md.digest().map("%02x".format(_)).mkString, rows.length)
-      } finally spark.conf.set("spark.sql.shuffle.partitions", "8")
-    }
-    val narrow = hashAll("4")
+  // One registry sweep at the given shuffle width: per query, an MD5 of the
+  // sorted rows and the row count.
+  private def sweep(parts: String): Map[String, (String, Int)] = {
+    spark.conf.set("spark.sql.shuffle.partitions", parts)
+    try SparkEntry.queries.map { case (name, fn) =>
+      val md = java.security.MessageDigest.getInstance("MD5")
+      val rows = fn(spark, sf0001).collect()
+      rows.map(_.toString).sorted.foreach(r => md.update(r.getBytes("UTF-8")))
+      name -> (md.digest().map("%02x".format(_)).mkString, rows.length)
+    } finally spark.conf.set("spark.sql.shuffle.partitions", "8")
+  }
+
+  // The shuffle-partitions-4 sweep is shared by the two tests below, so the
+  // full registry runs twice per suite, not three times. Whichever test runs
+  // first computes it.
+  private lazy val narrow = sweep("4")
+
+  test("every query runs at sf0.001 and every oracle key has a query") {
     // q06 (anti join) legitimately returns 0 at tiny scale; everything else
     // must produce rows
     val allowEmpty = Set("q06_anti_join")
@@ -31,7 +32,15 @@ class SparkEntrySpec extends SparkSuite {
       if (!allowEmpty(name)) assert(n > 0, s"$name returned 0 rows")
     }
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    val wide = hashAll("32")
+  }
+
+  test("suite-wide determinism: identical results under shuffle.partitions 4 vs 32") {
+    // The oracle gate sees ONE run — it cannot catch a query whose result
+    // depends on physical partitioning (float merge order, sketch merge
+    // order, non-deterministic tiebreaks). This closes that suite-wide:
+    // every query map entry, run under two different shuffle widths in the
+    // same session, must hash identically row-for-row.
+    val wide = sweep("32")
     val diff = narrow.keys.filter(k => narrow(k)._1 != wide(k)._1).toSeq.sorted
     assert(diff.isEmpty, s"partitioning-sensitive results: ${diff.mkString(", ")}")
   }
