@@ -54,11 +54,9 @@ object Bpe {
     * merge order; stops early (fewer rows) if the vocabulary runs out
     * of mergeable pairs. */
   def trainMerges(spark: SparkSession, docs: DataFrame, textCol: String,
-                  rounds: Int, checkpoint: Boolean = true): DataFrame = {
+                  rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
-    var words = cut(wordUniverse(docs, textCol)
+    var words = Lineage.cut(wordUniverse(docs, textCol)
       .withColumn("enc", regexp_replace(col("w"), "(.)", M + "$1" + M)))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
     var r = 1
@@ -80,7 +78,7 @@ object Bpe {
       else {
         val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
         merges += ((r.toLong, a, b, c))
-        words = cut(words.withColumn("enc",
+        words = Lineage.cut(words.withColumn("enc",
           call_function("replace", col("enc"),
             lit(M + a + M + M + b + M), lit(M + a + b + M))))
         r += 1

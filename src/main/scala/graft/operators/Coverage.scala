@@ -26,8 +26,9 @@ import org.apache.spark.sql.functions._
   * 8-byte keys) and repartitioned on the shingle key; each round is one
   * anti-join against the covered set (same key layout), one
   * partial-aggregable per-doc count, and a 1-row winner collect (the
-  * selection IS the model); the covered set is localCheckpointed per
-  * round so K rounds never compound lineage. Nothing quadratic, no
+  * selection IS the model); the incidence table is cut once, and round
+  * r's plan is that cut table with one anti-join per earlier winner
+  * (each against the winner's rows of the same cut table). Nothing quadratic, no
   * per-doc windows, text never shuffles (keys only). Winner gain = 0 is
   * impossible by construction (a fully-covered doc has no surviving
   * incidence rows), so the loop stops early when coverage saturates. */
@@ -37,8 +38,7 @@ object Coverage {
     * `(round, doc_id, gain, covered_total)` — gain = newly covered
     * shingles, covered_total = cumulative distinct shingles covered. */
   def maxCoverageSelect(spark: SparkSession, docs: DataFrame, idCol: String,
-                        textCol: String, shingleLen: Int, rounds: Int,
-                        checkpoint: Boolean = true): DataFrame = {
+                        textCol: String, shingleLen: Int, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     require(shingleLen >= 1, s"shingleLen must be >= 1, got $shingleLen")
     // materialize the incidence table ONCE, eagerly: every round's gain
@@ -47,14 +47,12 @@ object Coverage {
     // per round the only job is now the 1-row winner collect (r13: the
     // round's per-iteration localCheckpoint barriers measured as the
     // dominant cost of the iterative family at gate scale)
-    val incidence0 = docs
+    val incidence = Lineage.cut(docs
       .select(col(idCol).as("_doc"),
         explode(Text.fastWordShingles(col(textCol), shingleLen)).as("_s"))
       .select(col("_doc"), Dedup.shingleKey(col("_s")).as("_sh"))
       .distinct()
-      .repartition(col("_sh"))
-    val incidence = if (checkpoint) incidence0.localCheckpoint()
-      else incidence0.persist()
+      .repartition(col("_sh")))
     // remaining_r = incidence anti-join the winners' FULL shingle sets:
     // equivalent to the old "subtract only the uncovered subset" chain
     // (already-removed keys anti-join as no-ops), but each winner's set

@@ -73,14 +73,12 @@ object Eval {
     * group `(groupCol, n_pos, n_neg, u2, auc)`; auc NULL where a group
     * is single-class. */
   def aucExactPerGroup(df: DataFrame, groupCol: String, scoreCol: Column,
-                       positive: Column, subBucket: Column, idCol: Column,
-                       checkpoint: Boolean = true): DataFrame = {
+                       positive: Column, subBucket: Column, idCol: Column): DataFrame = {
     // the scored frame fans out inside groupedRank (rank window + the
     // counts/offsets branch) — cut it so an expensive caller score
     // evaluates once (measured 8.4x at 10x data without)
-    val scored0 = df.select(col(groupCol), scoreCol.as("_score"),
-      positive.as("_pos"), idCol.as("_id"), subBucket.as("_sbk"))
-    val scored = if (checkpoint) scored0.localCheckpoint() else scored0
+    val scored = Lineage.cut(df.select(col(groupCol), scoreCol.as("_score"),
+      positive.as("_pos"), idCol.as("_id"), subBucket.as("_sbk")))
     val ranked = Ranking.groupedRank(scored,
       col(groupCol), col("_sbk"), col("_score"), col("_id"))
     ranked
@@ -1125,6 +1123,46 @@ object Eval {
             sqrt(col("_den").cast("double"))).as("z"))
   }
 
+  /** Two-sample VALUE HISTOGRAM `(_v, _t, _pc, [_nc,] _b)`: NULL scores
+    * excluded up front (they would land in n and the tie terms but carry
+    * no orderable value — [[kendallTauExact]]'s contract), a NULL
+    * `positive` counts as negative; `_t` rows and `_pc` positives per
+    * value, `_nc = _t − _pc` negatives when `negatives`, `_b` the
+    * prefix-sum bucket. The one data-sized pass of the two-sample rank
+    * statistics; cut, since it fans into the offset spine and the sweep
+    * (uncut, the caller's score expression re-evaluates per branch — the
+    * q170 lesson). */
+  private def twoSampleHist(df: DataFrame, scoreCol: Column, positive: Column,
+                            bucketOf: Column => Column,
+                            negatives: Boolean = false): DataFrame = {
+    val hist = df
+      .where(scoreCol.isNotNull)
+      .select(scoreCol.cast("long").as("_v"),
+        when(positive, 1L).otherwise(0L).as("_p"))
+      .groupBy(col("_v"))
+      .agg(count(lit(1)).as("_t"), sum(col("_p")).as("_pc"))
+    Lineage.cut((if (negatives) hist.withColumn("_nc", col("_t") - col("_pc"))
+      else hist).withColumn("_b", bucketOf(col("_v"))))
+  }
+
+  /** `hist` (one row per value: `_v`, its bucket `_b`, its count `_t`)
+    * plus `_cb`, the EXCLUSIVE cumulative `_t` below `_v`: the two-level
+    * prefix sum — per-bucket frames over `(_b, _v)` plus a broadcast
+    * bucket-offset spine, so the only unpartitioned window is
+    * bucket-count-sized and nothing single-partition is data-sized. */
+  private def cumBefore(hist: DataFrame): DataFrame = {
+    val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val wOff = Window.orderBy(col("_b"))
+      .rowsBetween(Window.unboundedPreceding, -1)
+    val offsets = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
+      .select(col("_b"),
+        coalesce(sum(col("_bt")).over(wOff), lit(0L)).as("_off"))
+    hist
+      .join(broadcast(offsets), Seq("_b"))
+      .withColumn("_cb", col("_off") + coalesce(sum(col("_t")).over(wIn), lit(0L)))
+  }
+
   /** MANN–WHITNEY U test with tie-corrected normal approximation — the
     * significance companion to [[aucExact]] (AUC says HOW WELL the score
     * separates the classes; U's z-score says whether the separation
@@ -1159,33 +1197,9 @@ object Eval {
     * convention); auc/δ NULL when either class is empty, z additionally
     * NULL when all values tie (zero variance). */
   def mannWhitney(df: DataFrame, scoreCol: Column, positive: Column,
-                  bucketOf: Column => Column,
-                  checkpoint: Boolean = true): DataFrame = {
+                  bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    // NULL scores are excluded up front (they would land in n and the
-    // tie terms but carry no orderable value — same contract as
-    // kendallTauExact); a NULL `positive` counts as negative, which the
-    // when/otherwise below already encodes
-    val hist0 = df
-      .where(scoreCol.isNotNull)
-      .select(scoreCol.cast("long").as("_v"),
-        when(positive, 1L).otherwise(0L).as("_p"))
-      .groupBy(col("_v"))
-      .agg(count(lit(1)).as("_t"), sum(col("_p")).as("_pc"))
-      .withColumn("_b", bucketOf(col("_v")))
-    // fans into the offset spine and the sweep — cut or the caller's
-    // score expression re-evaluates per branch (the q170 lesson)
-    val hist = if (checkpoint) hist0.localCheckpoint() else hist0
-    val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
-      .select(col("_b"),
-        coalesce(sum(col("_bt")).over(wOff), lit(0L)).as("_off"))
-    hist
-      .join(broadcast(offsets), Seq("_b"))
-      .withColumn("_cb", col("_off") + coalesce(sum(col("_t")).over(wIn), lit(0L)))
+    cumBefore(twoSampleHist(df, scoreCol, positive, bucketOf))
       .agg(
         coalesce(sum(col("_pc")), lit(0L)).as("_n1"),
         coalesce(sum(col("_t")), lit(0L)).as("_n"),
@@ -1259,17 +1273,7 @@ object Eval {
     val hist = cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
       .withColumn("_b", bucketOf(col("_v")))
       .localCheckpoint() // fans into offsets, the sweep, and the tie term
-    val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
-      .select(col("_b"),
-        coalesce(sum(col("_bt")).over(wOff), lit(0L)).as("_off"))
-    val vcum = hist
-      .join(broadcast(offsets), Seq("_b"))
-      .withColumn("_cb", col("_off") + coalesce(sum(col("_t")).over(wIn), lit(0L)))
-      .select(col("_v"), col("_t"), col("_cb"))
+    val vcum = cumBefore(hist).select(col("_v"), col("_t"), col("_cb"))
     val perGroup = cells.join(vcum, Seq("_v"))
       .groupBy(col("_g"))
       .agg(sum(col("_c")).as("_ng"),
@@ -1341,17 +1345,15 @@ object Eval {
     * k < 2 or the variance degenerates, z_tie additionally NULL when
     * N < 3 (the B term divides by N−2). */
   def jonckheereTerpstra(df: DataFrame, groupCol: Column, valueCol: Column,
-                         bucketOf: Column => Column,
-                         checkpoint: Boolean = true): DataFrame = {
+                         bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    def cut(d: DataFrame): DataFrame = if (checkpoint) d.localCheckpoint() else d
-    val cells = cut(df
+    val cells = Lineage.cut(df
       .where(valueCol.isNotNull && groupCol.isNotNull)
       .select(groupCol.cast("long").as("_g"), valueCol.cast("long").as("_v"))
       .groupBy(col("_g"), col("_v"))
       .agg(count(lit(1)).as("_c"))) // fans into groups, hist, dense, ng
     val groups = cells.select(col("_g")).distinct() // k rows
-    val hist = cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
+    val hist = Lineage.cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
       .withColumn("_b", bucketOf(col("_v")))) // fans into dense, offsets, ties
     // dense k·V frame: every (group, value) cell, absent ones at 0 —
     // LB/LE need cumulatives evaluated at values the group may not have
@@ -1454,28 +1456,11 @@ object Eval {
     * z NULL when either cohort is empty, N < 2, or the score variance
     * degenerates (all values tied). */
   def moodScaleTest(df: DataFrame, scoreCol: Column, positive: Column,
-                    bucketOf: Column => Column,
-                    checkpoint: Boolean = true): DataFrame = {
+                    bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val hist0 = df
-      .where(scoreCol.isNotNull)
-      .select(scoreCol.cast("long").as("_v"),
-        when(positive, 1L).otherwise(0L).as("_p"))
-      .groupBy(col("_v"))
-      .agg(count(lit(1)).as("_t"), sum(col("_p")).as("_pc"))
-      .withColumn("_b", bucketOf(col("_v")))
-    val hist = if (checkpoint) hist0.localCheckpoint() else hist0
-    val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
-      .select(col("_b"),
-        coalesce(sum(col("_bt")).over(wOff), lit(0L)).as("_off"))
+    val hist = twoSampleHist(df, scoreCol, positive, bucketOf)
     val tot = hist.agg(coalesce(sum(col("_t")), lit(0L)).as("_n"))
-    hist
-      .join(broadcast(offsets), Seq("_b"))
-      .withColumn("_cb", col("_off") + coalesce(sum(col("_t")).over(wIn), lit(0L)))
+    cumBefore(hist)
       .crossJoin(broadcast(tot)) // 1-row scalar attach
       .withColumn("_d", lit(2L) * col("_cb") + col("_t") - col("_n"))
       .agg(
@@ -1532,28 +1517,11 @@ object Eval {
     * negative. Returns ONE row `(n_pos, n_neg, t_q, num, z)`; z NULL
     * when either cohort is empty, N < 2, or the scores degenerate. */
   def ansariBradley(df: DataFrame, scoreCol: Column, positive: Column,
-                    bucketOf: Column => Column,
-                    checkpoint: Boolean = true): DataFrame = {
+                    bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val hist0 = df
-      .where(scoreCol.isNotNull)
-      .select(scoreCol.cast("long").as("_v"),
-        when(positive, 1L).otherwise(0L).as("_p"))
-      .groupBy(col("_v"))
-      .agg(count(lit(1)).as("_t"), sum(col("_p")).as("_pc"))
-      .withColumn("_b", bucketOf(col("_v")))
-    val hist = if (checkpoint) hist0.localCheckpoint() else hist0
-    val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
-      .select(col("_b"),
-        coalesce(sum(col("_bt")).over(wOff), lit(0L)).as("_off"))
+    val hist = twoSampleHist(df, scoreCol, positive, bucketOf)
     val tot = hist.agg(coalesce(sum(col("_t")), lit(0L)).as("_n"))
-    hist
-      .join(broadcast(offsets), Seq("_b"))
-      .withColumn("_cb", col("_off") + coalesce(sum(col("_t")).over(wIn), lit(0L)))
+    cumBefore(hist)
       .crossJoin(broadcast(tot)) // 1-row scalar attach
       // folded block sum, doubled: lo..hi split at the kink M DIV 2
       .withColumn("_lo", col("_cb") + lit(1L))
@@ -1615,29 +1583,18 @@ object Eval {
     * median_q, above_total, chi2_micro)`; chi2_micro NULL when k < 2 or
     * every value sits on one side of the median (a degenerate table). */
   def moodMedianTest(df: DataFrame, groupCol: String, valueCol: Column,
-                     bucketOf: Column => Column,
-                     checkpoint: Boolean = true): DataFrame = {
+                     bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    def cut(d: DataFrame): DataFrame = if (checkpoint) d.localCheckpoint() else d
-    val cells = cut(df
+    val cells = Lineage.cut(df
       .where(valueCol.isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).as("_g"), valueCol.cast("long").as("_v"))
       .groupBy(col("_g"), col("_v"))
       .agg(count(lit(1)).as("_c"))) // fans into hist and the 2×k table
-    val hist = cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
+    val hist = Lineage.cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
       .withColumn("_b", bucketOf(col("_v")))) // fans into offsets + median
-    val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
-      .select(col("_b"),
-        coalesce(sum(col("_bt")).over(wOff), lit(0L)).as("_off"))
     val tot = hist.agg(coalesce(sum(col("_t")), lit(0L)).as("_n"))
-    val med = hist
-      .join(broadcast(offsets), Seq("_b"))
-      .withColumn("_cum",
-        col("_off") + coalesce(sum(col("_t")).over(wIn), lit(0L)) + col("_t"))
+    val med = cumBefore(hist)
+      .withColumn("_cum", col("_cb") + col("_t"))
       .crossJoin(broadcast(tot)) // 1-row scalar attach
       .where(col("_cum") >= expr("(_n + 1) DIV 2"))
       .agg(min(col("_v")).as("_m")) // grand lower median, 1 row
@@ -1884,17 +1841,9 @@ object Eval {
     * `(n_pos, n_neg, w1_num, w1)`; w1 NULL when either cohort is
     * empty. */
   def wasserstein1(df: DataFrame, scoreCol: Column, positive: Column,
-                   bucketOf: Column => Column,
-                   checkpoint: Boolean = true): DataFrame = {
+                   bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val hist0 = df
-      .where(scoreCol.isNotNull)
-      .select(scoreCol.cast("long").as("_v"),
-        when(positive, 1L).otherwise(0L).as("_p"))
-      .groupBy(col("_v"))
-      .agg(count(lit(1)).as("_t"), sum(col("_p")).as("_pc"))
-      .withColumn("_b", bucketOf(col("_v")))
-    val hist = if (checkpoint) hist0.localCheckpoint() else hist0
+    val hist = twoSampleHist(df, scoreCol, positive, bucketOf)
     val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
       .rowsBetween(Window.unboundedPreceding, 0) // inclusive cumulative
     val wLead = Window.partitionBy(col("_b")).orderBy(col("_v"))
@@ -1956,17 +1905,9 @@ object Eval {
     * Returns ONE row `(n_pos, n_neg, cvm_num, t_stat)`; t_stat NULL
     * when either cohort is empty. */
   def cramerVonMises(df: DataFrame, scoreCol: Column, positive: Column,
-                     bucketOf: Column => Column,
-                     checkpoint: Boolean = true): DataFrame = {
+                     bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val hist0 = df
-      .where(scoreCol.isNotNull)
-      .select(scoreCol.cast("long").as("_v"),
-        when(positive, 1L).otherwise(0L).as("_p"))
-      .groupBy(col("_v"))
-      .agg(count(lit(1)).as("_t"), sum(col("_p")).as("_pc"))
-      .withColumn("_b", bucketOf(col("_v")))
-    val hist = if (checkpoint) hist0.localCheckpoint() else hist0
+    val hist = twoSampleHist(df, scoreCol, positive, bucketOf)
     val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
       .rowsBetween(Window.unboundedPreceding, 0) // inclusive cumulative
     val wOff = Window.orderBy(col("_b"))
@@ -2022,18 +1963,9 @@ object Eval {
     * `(n_pos, n_neg, sxy, sxx, syy, e_dist)`; e_dist NULL when either
     * cohort is empty. */
   def energyDistance(df: DataFrame, scoreCol: Column, positive: Column,
-                     bucketOf: Column => Column,
-                     checkpoint: Boolean = true): DataFrame = {
+                     bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    val hist0 = df
-      .where(scoreCol.isNotNull)
-      .select(scoreCol.cast("long").as("_v"),
-        when(positive, 1L).otherwise(0L).as("_p"))
-      .groupBy(col("_v"))
-      .agg(count(lit(1)).as("_t"), sum(col("_p")).as("_pc"))
-      .withColumn("_nc", col("_t") - col("_pc"))
-      .withColumn("_b", bucketOf(col("_v")))
-    val hist = if (checkpoint) hist0.localCheckpoint() else hist0
+    val hist = twoSampleHist(df, scoreCol, positive, bucketOf, negatives = true)
     val wEx = Window.partitionBy(col("_b")).orderBy(col("_v"))
       .rowsBetween(Window.unboundedPreceding, -1) // exclusive cumulative
     val wOff = Window.orderBy(col("_b"))
@@ -2120,36 +2052,25 @@ object Eval {
     * `(n, k_groups, sum_term, t_conover)`; t_conover NULL when k < 2 or
     * the score variance degenerates (all deviations tied). */
   def conoverSquaredRanks(df: DataFrame, groupCol: String, valueCol: Column,
-                          bucketOf: Column => Column, scoreShift: Int = 0,
-                          checkpoint: Boolean = true): DataFrame = {
+                          bucketOf: Column => Column, scoreShift: Int = 0): DataFrame = {
     require(scoreShift >= 0 && scoreShift < 63, s"bad scoreShift $scoreShift")
     val dec = "decimal(38,0)"
-    def cut(d: DataFrame): DataFrame = if (checkpoint) d.localCheckpoint() else d
-    val rows = cut(df
+    val rows = Lineage.cut(df
       .where(valueCol.isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).as("_g"), valueCol.cast("long").as("_y")))
     // k-row group centers: site-floored integer means (negative-safe)
     val gstats = rows.groupBy(col("_g"))
       .agg(count(lit(1)).as("_ng0"), sum(col("_y")).as("_sg0"))
       .select(col("_g"), expr("(_sg0 - pmod(_sg0, _ng0)) DIV _ng0").as("_mg"))
-    val cells = cut(rows
+    val cells = Lineage.cut(rows
       .join(broadcast(gstats), Seq("_g"))
       .select(col("_g"), abs(col("_y") - col("_mg")).as("_v"))
       .groupBy(col("_g"), col("_v"))
       .agg(count(lit(1)).as("_c"))) // fans into the histogram and the rank join
-    val hist = cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
+    val hist = Lineage.cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
       .withColumn("_b", bucketOf(col("_v"))))
-    val wIn = Window.partitionBy(col("_b")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOff = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
-      .select(col("_b"),
-        coalesce(sum(col("_bt")).over(wOff), lit(0L)).as("_off"))
     // aq = (2·midrank)² >> shift — the fixed score family
-    val vscore = hist
-      .join(broadcast(offsets), Seq("_b"))
-      .withColumn("_cb", col("_off") + coalesce(sum(col("_t")).over(wIn), lit(0L)))
+    val vscore = cumBefore(hist)
       .withColumn("_d", lit(2L) * col("_cb") + col("_t") + lit(1L))
       .select(col("_v"), col("_t"),
         shiftright(col("_d") * col("_d"), scoreShift).as("_aq"))
@@ -2215,29 +2136,18 @@ object Eval {
     * `(n, k_groups, sum_s, a2)`; a2 NULL when k < 2 or all values are
     * tied (L < 2 — every denominator degenerates). */
   def andersonDarlingK(df: DataFrame, groupCol: String, valueCol: Column,
-                       bucketOf: Column => Column,
-                       checkpoint: Boolean = true): DataFrame = {
+                       bucketOf: Column => Column): DataFrame = {
     val dec = "decimal(38,0)"
-    def cut(d: DataFrame): DataFrame = if (checkpoint) d.localCheckpoint() else d
-    val cells = cut(df
+    val cells = Lineage.cut(df
       .where(valueCol.isNotNull && col(groupCol).isNotNull)
       .select(col(groupCol).as("_g"), valueCol.cast("long").as("_v"))
       .groupBy(col("_g"), col("_v"))
       .agg(count(lit(1)).as("_c"))) // fans into groups, hist, dense, ng
     val groups = cells.select(col("_g")).distinct() // k rows
-    val hist = cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
+    val hist = Lineage.cut(cells.groupBy(col("_v")).agg(sum(col("_c")).as("_t"))
       .withColumn("_b", bucketOf(col("_v")))) // fans into dense, offsets, pooled cum
     // pooled cumulative-below -> b2 = 2cb + l per distinct value
-    val wInV = Window.partitionBy(col("_b")).orderBy(col("_v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wOffV = Window.orderBy(col("_b"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offV = hist.groupBy(col("_b")).agg(sum(col("_t")).as("_bt"))
-      .select(col("_b"),
-        coalesce(sum(col("_bt")).over(wOffV), lit(0L)).as("_offv"))
-    val vcum = hist
-      .join(broadcast(offV), Seq("_b"))
-      .withColumn("_cb", col("_offv") + coalesce(sum(col("_t")).over(wInV), lit(0L)))
+    val vcum = cumBefore(hist)
       .select(col("_v"), col("_t"),
         (lit(2L) * col("_cb") + col("_t")).as("_b2"))
     // dense k·V frame: M must be evaluated at values the group lacks
@@ -2666,15 +2576,15 @@ object Eval {
       math.round(1e6 / (math.log(r + 1.0) / math.log(2.0))))).toDF("_r", "_w"))
     val base = df.select(scoreCol.as("_score"), gainCol.cast("long").as("_gain"),
       idCol.as("_id"))
-    def cut(ordered: Seq[Column]): DataFrame = {
+    def topKGain(ordered: Seq[Column]): DataFrame = {
       val win = org.apache.spark.sql.expressions.Window.orderBy(ordered: _*)
       base.orderBy(ordered: _*).limit(k) // TakeOrdered; ranks over <= k rows
         .withColumn("_r", row_number().over(win).cast("long"))
         .join(weights, Seq("_r"))
         .agg(coalesce(sum(col("_gain") * col("_w")), lit(0L)).as("_s"))
     }
-    cut(Seq(col("_score").desc, col("_id"))).select(col("_s").as("dcg_u"))
-      .crossJoin(cut(Seq(col("_gain").desc, col("_id"))).select(col("_s").as("idcg_u")))
+    topKGain(Seq(col("_score").desc, col("_id"))).select(col("_s").as("dcg_u"))
+      .crossJoin(topKGain(Seq(col("_gain").desc, col("_id"))).select(col("_s").as("idcg_u")))
       .select(lit(k.toLong).as("k"), col("dcg_u"), col("idcg_u"),
         when(col("idcg_u") > 0,
           col("dcg_u").cast("double") / col("idcg_u").cast("double")).as("ndcg"))

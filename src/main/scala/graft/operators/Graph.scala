@@ -57,29 +57,23 @@ object Graph {
     * the (often expensive) edge construction — measured r13: weighted
     * labelPropagation 6.2 s with lazy persist vs 4.2 s with per-round
     * barriers, BOTH beaten by the eager edge cut + lazy rounds shape.
-    * `checkpoint = false` (the spec plan-inspection path) keeps the old
-    * lazy persist so the cached co-partitioned edge reuse stays visible
-    * in one executed plan. */
-  private def cutEdges(checkpoint: Boolean, df: DataFrame): DataFrame =
-    if (checkpoint) df.localCheckpoint() else df.persist()
+    * Inside [[Lineage.uncut]] the table is lazily persisted instead, so
+    * the cached co-partitioned edge reuse stays visible in one executed
+    * plan. */
+  private def cutEdges(df: DataFrame): DataFrame =
+    if (Lineage.cutting) Lineage.cut(df) else df.persist()
 
-  private def cutRound(checkpoint: Boolean, round: Int,
-                       df: DataFrame): DataFrame =
-    if (checkpoint && round % CutEvery == 0) df.localCheckpoint() else df
+  private def cutRound(round: Int, df: DataFrame): DataFrame =
+    if (round % CutEvery == 0) Lineage.cut(df) else df
 
   /** `iterations` rounds of damped integer PageRank over a directed edge
     * list (dedup'd internally). Nodes = src ∪ dst. Returns (node,
     * rank_fp) with rank_fp in fixed-point `scale` units. Dangling nodes
     * (no out-edges) leak their mass — the classic simplification; the
-    * teleport term keeps every node positive.
-    *
-    * `checkpoint = false` keeps the full lineage (specs inspect the
-    * per-round plan shape through it); production leaves it on — an
-    * uncheckpointed 20-round lineage re-executes from the scan on any
-    * retry and the plan grows without bound. */
+    * teleport term keeps every node positive. */
   def pageRankInt(edges: DataFrame, srcCol: String, dstCol: String,
                   iterations: Int, dampNum: Long = 85L, dampDen: Long = 100L,
-                  scale: Long = 1000000L, checkpoint: Boolean = true,
+                  scale: Long = 1000000L,
                   seeds: Option[DataFrame] = None,
                   weightCol: Option[String] = None): DataFrame = {
     require(iterations >= 1, "iterations must be >= 1")
@@ -90,7 +84,7 @@ object Graph {
     // scale that allows weights into the billions). Parallel edges
     // aggregate their weights; weightCol = None keeps the unweighted
     // arithmetic bit-for-bit (w = 1, strength = out-degree).
-    val e = cutEdges(checkpoint, (weightCol match {
+    val e = cutEdges((weightCol match {
       case Some(wc) =>
         edges.groupBy(col(srcCol).as("src"), col(dstCol).as("dst"))
           .agg(sum(col(wc)).cast("long").as("w"))
@@ -122,7 +116,7 @@ object Graph {
     })
     // nodes fans into the initial ranks AND every round's left join —
     // cut it with the edge table (node-sized, one tiny job)
-    val nodesC = cutEdges(checkpoint, nodes)
+    val nodesC = cutEdges(nodes)
     val outdeg = e.groupBy(col("src")).agg(sum(col("w")).as("deg"))
     val teleport = (scale * (dampDen - dampNum)) / dampDen
 
@@ -138,7 +132,7 @@ object Graph {
         .groupBy(col("dst")).agg(sum(col("c")).as("in_fp"))
       // rounds stay LAZY (one job plans them all); lineage is bounded by
       // the CutEvery cadence over the materialized edge/node tables
-      ranks = cutRound(checkpoint, i, nodesC
+      ranks = cutRound(i, nodesC
         .join(contrib.withColumnRenamed("dst", "node"), Seq("node"), "left")
         .select(col("node"),
           expr(s"(CASE WHEN _seed THEN ${teleport}L ELSE 0L END) + " +
@@ -170,7 +164,7 @@ object Graph {
     * windows, no per-node sort, nothing quadratic; labels are
     * localCheckpointed per round. Returns `(node, label)`. */
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-                       rounds: Int, checkpoint: Boolean = true,
+                       rounds: Int,
                        weightCol: Option[String] = None): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // WEIGHTED variant: votes carry the edge weight instead of 1 — a
@@ -198,11 +192,11 @@ object Graph {
           .where(col("a") =!= col("b")).distinct()
           .withColumn("w", lit(1L))
     }
-    val e = cutEdges(checkpoint,
+    val e = cutEdges(
       canon.select(col("a").as("src"), col("b").as("dst"), col("w"))
         .unionAll(canon.select(col("b").as("src"), col("a").as("dst"), col("w")))
         .repartition(col("src")))
-    val nodes = cutEdges(checkpoint,
+    val nodes = cutEdges(
       e.groupBy(col("src")).agg(max(col("w")).as("sw"))
         .withColumnRenamed("src", "node"))
     var labels = nodes.select(col("node"), col("node").as("label"))
@@ -218,7 +212,7 @@ object Graph {
       // partial-aggregable aggregate, never a per-node sort/window.
       // Rounds stay lazy over the materialized edge/node tables; lineage
       // is bounded by the CutEvery cadence (see the helpers' scaladoc).
-      labels = cutRound(checkpoint, r, votes.groupBy(col("node"))
+      labels = cutRound(r, votes.groupBy(col("node"))
         .agg(max_by(col("nl"), struct(col("c"), (-col("nl")).as("neg")))
           .as("label")))
     }
@@ -268,17 +262,15 @@ object Graph {
     * at least one node per non-final round; real graphs converge in a
     * handful (the denser the graph, the fewer) — `maxRounds` bounds the
     * pathological chain and failure is LOUD, not a silent partial answer.
-    * `checkpoint` truncates per-round lineage exactly as [[pageRankInt]]. */
+    * The surviving edges are cut every round. */
   def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-            maxRounds: Int = 30, checkpoint: Boolean = true): DataFrame = {
+            maxRounds: Int = 30): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
     def degrees(e: DataFrame): DataFrame =
       e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
         .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
-    var e = cut(edges
+    var e = Lineage.cut(edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .where(col("a") =!= col("b"))
@@ -294,7 +286,7 @@ object Graph {
       // measured and reverted — the duplicate lazy re-execution of the
       // first peel's semi-joins cost more than the saved job barriers)
       val keep = degrees(e).where(col("core_deg") >= k).select(col("node"))
-      val next = cut(e
+      val next = Lineage.cut(e
         .join(keep.withColumnRenamed("node", "a"), Seq("a"), "left_semi")
         .join(keep.withColumnRenamed("node", "b"), Seq("b"), "left_semi"))
       val n2 = next.count()
@@ -340,14 +332,14 @@ object Graph {
     * localCheckpointed per round. Returns `(node, core_h)` — the core
     * number once converged. */
   def coreNumbers(edges: DataFrame, srcCol: String, dstCol: String,
-                  rounds: Int, checkpoint: Boolean = true): DataFrame = {
+                  rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val canon = edges
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-    val e = cutEdges(checkpoint,
+    val e = cutEdges(
       canon.select(col("a").as("src"), col("b").as("dst"))
         .unionAll(canon.select(col("b").as("src"), col("a").as("dst")))
         .repartition(col("src")))
@@ -367,7 +359,7 @@ object Graph {
       // attained at the smallest distinct value ≥ H) — tie-free math, no
       // per-neighbor rank anywhere. Rounds stay lazy over the
       // materialized edge table; lineage bounded by the CutEvery cadence.
-      h = cutRound(checkpoint, r, e
+      h = cutRound(r, e
         .join(h.select(col("node").as("src"), col("core_h").as("nh")), Seq("src"))
         .select(col("dst").as("node"), col("nh"))
         .groupBy(col("node"), col("nh")).agg(count(lit(1)).as("_c"))
@@ -405,20 +397,17 @@ object Graph {
     * co-purchase graph): the wedge shape shuffled 24.6M wedge rows where
     * this shuffles 2×1.18M array-carrying rows (plan evidence:
     * plans/r13/q94_triangles_{before,after}.txt). */
-  private def triangleCore(canon: DataFrame,
-                           checkpoint: Boolean): (DataFrame, DataFrame) = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
+  private def triangleCore(canon: DataFrame): (DataFrame, DataFrame) = {
     // canon fans into deg (twice), oriented and the edge count — cut it
     // so the (often expensive) upstream edge construction runs ONCE
-    val canonC = cut(canon)
+    val canonC = Lineage.cut(canon)
     // undirected degree: each canonical edge contributes to both endpoints
     val deg = canonC.select(col("a").as("node"))
       .union(canonC.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("deg"))
     // orient low-(deg, id) → high-(deg, id): bounds every out-degree by
     // O(√m) regardless of in-degree skew (the celebrity-node guard)
-    val oriented = cut(canonC
+    val oriented = Lineage.cut(canonC
       .join(deg.withColumnRenamed("node", "a").withColumnRenamed("deg", "deg_a"), Seq("a"))
       .join(deg.withColumnRenamed("node", "b").withColumnRenamed("deg", "deg_b"), Seq("b"))
       .select(
@@ -444,9 +433,8 @@ object Graph {
     (core, deg)
   }
 
-  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String,
-                    checkpoint: Boolean = true): DataFrame =
-    triangleCore(canonEdges(edges, srcCol, dstCol), checkpoint)._1
+  def triangleCount(edges: DataFrame, srcCol: String, dstCol: String): DataFrame =
+    triangleCore(canonEdges(edges, srcCol, dstCol))._1
 
   /** Global clustering coefficient (transitivity) — the one-number
     * summary of how "community-like" a graph is: `C = 3·T / W` with `T`
@@ -462,13 +450,12 @@ object Graph {
     * audited shape. Output: one row `(n_nodes, n_edges, n_triangles,
     * n_wedges, global_cc)`. */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
-                            dstCol: String,
-                            checkpoint: Boolean = true): DataFrame = {
+                            dstCol: String): DataFrame = {
     // ONE canon/deg computation feeds both the triangle core and the
     // wedge sum (pre-r13 this called triangleCount AND re-derived
     // canon+deg itself — the whole co-purchase edge construction ran
     // twice in the executed plan)
-    val (core, deg) = triangleCore(canonEdges(edges, srcCol, dstCol), checkpoint)
+    val (core, deg) = triangleCore(canonEdges(edges, srcCol, dstCol))
     val wedges = deg.agg(
       sum(expr("deg * (deg - 1) DIV 2")).as("n_wedges"))
     core
@@ -505,10 +492,7 @@ object Graph {
     * increment per micro-batch. Returns ONE row
     * `(n_old_edges, n_fresh_edges, new_triangles)`. */
   def triangleIncrement(oldEdges: DataFrame, newEdges: DataFrame,
-                        srcCol: String, dstCol: String,
-                        checkpoint: Boolean = true): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
+                        srcCol: String, dstCol: String): DataFrame = {
     def canon(df: DataFrame) = df
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
@@ -517,8 +501,8 @@ object Graph {
     // oldC fans into the tagged union, the anti-join, AND the edge count —
     // uncheckpointed, an expensive upstream (e.g. a co-purchase self-join)
     // would run three times (the q170 lesson)
-    val oldC = cut(canon(oldEdges))
-    val fresh = cut(canon(newEdges).join(oldC, Seq("a", "b"), "left_anti"))
+    val oldC = Lineage.cut(canon(oldEdges))
+    val fresh = Lineage.cut(canon(newEdges).join(oldC, Seq("a", "b"), "left_anti"))
     val tagged = oldC.select(col("a"), col("b"), lit(false).as("fr"))
       .union(fresh.select(col("a"), col("b"), lit(true).as("fr")))
     val adj = tagged
@@ -548,8 +532,8 @@ object Graph {
     // gate, a graph whose degree table fits broadcasts (bench scale, and
     // any graph small enough that this operator isn't shuffle-bound
     // anyway); past the budget it falls back to the shuffled equi-join.
-    val deg = cut(adj.groupBy(col("node")).agg(count(lit(1)).as("_d")))
-    val degFits = checkpoint && deg.count() <= (1L << 20)
+    val deg = Lineage.cut(adj.groupBy(col("node")).agg(count(lit(1)).as("_d")))
+    val degFits = deg.count() <= (1L << 20)
     def maybeB(df: DataFrame): DataFrame = if (degFits) broadcast(df) else df
     val bases = fresh.select(col("a").as("bu"), col("b").as("bv"))
       .join(maybeB(deg.select(col("node").as("bu"), col("_d").as("_du"))), Seq("bu"))
@@ -600,17 +584,14 @@ object Graph {
     * consumer, measured ~2x on a 300k-edge graph).
     * Returns `(node, hub_fp, auth_fp)`. */
   def hitsInt(edges: DataFrame, srcCol: String, dstCol: String,
-              iterations: Int, scale: Long = 1000000L,
-              checkpoint: Boolean = true): DataFrame = {
+              iterations: Int, scale: Long = 1000000L): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(scale >= 1L, s"scale must be >= 1, got $scale")
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
-    val e = cutEdges(checkpoint,
+    val e = cutEdges(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .distinct()
         .repartition(col("src")))
-    val nodes = cutEdges(checkpoint, e.select(col("src").as("node"))
+    val nodes = cutEdges(e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct())
     var scores = nodes.select(col("node"),
       lit(scale).as("hub_fp"), lit(scale).as("auth_fp"))
@@ -622,7 +603,7 @@ object Graph {
       // across those consumers (measured 1.7-2x on a 300k-edge graph), so
       // without the cut the join+agg re-executes per consumer. The frames
       // are node-sized, the one case checkpointing is for.
-      val rawAuth = cut(e
+      val rawAuth = Lineage.cut(e
         .join(scores.select(col("node").as("src"), col("hub_fp")), Seq("src"))
         .groupBy(col("dst")).agg(sum(col("hub_fp")).as("raw")))
       val auth = rawAuth
@@ -630,7 +611,7 @@ object Graph {
         .select(col("dst").as("node"),
           expr(s"(raw * ${scale}L) DIV mx").as("auth_fp"))
       // hub half-round: pull the NEW authority mass back along out-edges
-      val rawHub = cut(e
+      val rawHub = Lineage.cut(e
         .join(auth.select(col("node").as("dst"), col("auth_fp")), Seq("dst"))
         .groupBy(col("src")).agg(sum(col("auth_fp")).as("raw")))
       val hub = rawHub
@@ -693,12 +674,9 @@ object Graph {
     * Returns `(node, dist)` — nodes unreached within `rounds` edges are
     * absent. */
   def ssspInt(edges: DataFrame, srcCol: String, dstCol: String,
-              weightCol: String, seeds: DataFrame, rounds: Int,
-              checkpoint: Boolean = true): DataFrame = {
+              weightCol: String, seeds: DataFrame, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
-    val e = cutEdges(checkpoint, edges
+    val e = cutEdges(edges
       .select(col(srcCol).as("src"), col(dstCol).as("dst"),
         col(weightCol).cast("long").as("_w0"))
       .withColumn("_wc",
@@ -718,7 +696,7 @@ object Graph {
     // O(m) join work per round, frontier-sized by the same delta
     // argument (a node whose distance is unchanged re-offers candidates
     // already merged).
-    var dist = cut(
+    var dist = Lineage.cut(
       seeds.select(col(seeds.columns.head).as("node")).distinct()
         .withColumn("dist", lit(0L)).withColumn("_r", lit(0)))
     for (r <- 1 to rounds) {
@@ -730,7 +708,7 @@ object Graph {
         .groupBy(col("node")).agg(min(col("dist")).as("dist"))
       // full-outer min merge ≡ the union+groupBy-min merge, plus the
       // improvement flag needed to read next round's frontier off dist
-      dist = cut(dist
+      dist = Lineage.cut(dist
         .select(col("node"), col("dist").as("_od"), col("_r").as("_or"))
         .join(cand.select(col("node"), col("dist").as("_nd")), Seq("node"), "full")
         .select(col("node"),
@@ -744,16 +722,13 @@ object Graph {
   }
 
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
-                   seeds: DataFrame, maxHops: Int,
-                   checkpoint: Boolean = true): DataFrame = {
+                   seeds: DataFrame, maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
-    val e = cutEdges(checkpoint,
+    val e = cutEdges(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .distinct()
         .repartition(col("src")))
-    var settled = cut(
+    var settled = Lineage.cut(
       seeds.select(col(seeds.columns.head).as("node")).distinct()
         .withColumn("dist", lit(0L)))
     var hop = 1L
@@ -769,7 +744,7 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(settled.select(col("node")), Seq("node"), "left_anti")
         .withColumn("dist", lit(hop))
-      settled = cut(settled.union(next))
+      settled = Lineage.cut(settled.union(next))
       hop += 1L
     }
     settled

@@ -247,8 +247,7 @@ object Linkage {
     * upstream generator's blocking, never the corpus. */
   def mutualBestMatch(pairs: DataFrame, leftCol: String, rightCol: String,
                       scoreCol: String, rounds: Int = 1,
-                      smallerIsBetter: Boolean = true,
-                      checkpoint: Boolean = true): DataFrame = {
+                      smallerIsBetter: Boolean = true): DataFrame = {
     require(rounds >= 1 && rounds <= 8, s"rounds must be in [1, 8], got $rounds")
     def score = if (smallerIsBetter) col("_s").asc else col("_s").desc
     def wE = Window.partitionBy(col("_e"))
@@ -274,8 +273,7 @@ object Linkage {
       // generator) re-executes inside every later round's lineage — the
       // r-th round's plan held r copies of the whole cascade. Only
       // rounds > 1 need the cut; the pair-pool frame is candidate-sized.
-      val flagged = if (checkpoint && r < rounds) flagged0.localCheckpoint()
-        else flagged0
+      val flagged = if (r < rounds) Lineage.cut(flagged0) else flagged0
       val matched = flagged.where(col("_hit") === 1 && col("_e") === col("_pa"))
         .select(col("_pa").as(leftCol), col("_pb").as(rightCol),
           col("_s").as(scoreCol), lit(r.toLong).as("round"))

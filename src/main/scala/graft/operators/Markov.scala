@@ -37,20 +37,18 @@ object Markov {
     * Consecutive pairs only; each key's first event has no predecessor
     * and contributes nothing. */
   def transitionMatrix(df: DataFrame, keyCol: Column, stateCol: Column,
-                       orderCols: Seq[Column],
-                       checkpoint: Boolean = true): DataFrame = {
+                       orderCols: Seq[Column]): DataFrame = {
     val named = orderCols.zipWithIndex.map { case (c, i) => c.as(s"_o$i") }
     val base = df.select(
       Seq(keyCol.as("_k"), stateCol.as("_s")) ++ named: _*)
     val w = Window.partitionBy(col("_k"))
       .orderBy(orderCols.indices.map(i => col(s"_o$i")): _*)
-    val counts0 = base
+    // fans into the totals derivation below
+    val counts = Lineage.cut(base
       .withColumn("_prev", lag(col("_s"), 1).over(w))
       .where(col("_prev").isNotNull)
       .groupBy(col("_prev").as("from_state"), col("_s").as("to_state"))
-      .agg(count(lit(1)).as("c"))
-    // fans into the totals derivation below
-    val counts = if (checkpoint) counts0.localCheckpoint() else counts0
+      .agg(count(lit(1)).as("c")))
     val totals = counts.groupBy(col("from_state"))
       .agg(sum(col("c")).as("c_from"))
     counts

@@ -41,11 +41,8 @@ object Mmr {
     * `(round, id, rel_micro, maxsim_micro, score2)` — one row per round
     * in pick order. */
   def mmrSelect(spark: SparkSession, items: DataFrame, idCol: String,
-                vecCol: String, queryId: Long, k: Int,
-                checkpoint: Boolean = true): DataFrame = {
+                vecCol: String, queryId: Long, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint() else df
     def cosMicro(qn: String, cn: String, a: String, b: String) =
       round(when(col(qn) * col(cn) === 0.0, lit(0.0))
         .otherwise(Vectors.fastDot(col(a), col(b)) / (col(qn) * col(cn)))
@@ -54,7 +51,7 @@ object Mmr {
       col(vecCol).as("_v"), Vectors.norm(col(vecCol)).as("_n"))
     val q = broadcast(base.where(col("_id") === queryId)
       .select(col("_v").as("_qv"), col("_n").as("_qn")))
-    val rel = cut(base.where(col("_id") =!= queryId)
+    val rel = Lineage.cut(base.where(col("_id") =!= queryId)
       .crossJoin(q)
       .select(col("_id"), col("_v"), col("_n"),
         cosMicro("_qn", "_n", "_qv", "_v").as("_rel")))

@@ -32,14 +32,12 @@ object Skyline {
     * input row's (idCol, xCol, yCol) for each survivor. `bucketOf` maps
     * x to its prefix-max bucket (integral, order-consistent). */
   def paretoFront2D(df: DataFrame, idCol: String, xCol: Column, yCol: Column,
-                    bucketOf: Column => Column,
-                    checkpoint: Boolean = true): DataFrame = {
+                    bucketOf: Column => Column): DataFrame = {
     // pts fans into the histogram AND the frontier join-back — without a
     // cut, an expensive caller expression (a quality score) evaluates
     // twice and the 10x ratio goes superlinear (measured 12.5x)
-    val pts0 = df.select(col(idCol), xCol.cast("long").as("_x"),
-      yCol.cast("long").as("_y"))
-    val pts = if (checkpoint) pts0.localCheckpoint() else pts0
+    val pts = Lineage.cut(df.select(col(idCol), xCol.cast("long").as("_x"),
+      yCol.cast("long").as("_y")))
     val hist = pts.groupBy(col("_x")).agg(max(col("_y")).as("_h"))
       .withColumn("_b", bucketOf(col("_x")))
     // P(x): running max of H over x' < x, two-level

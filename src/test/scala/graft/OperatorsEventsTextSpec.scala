@@ -680,8 +680,7 @@ class OperatorsEventsTextSpec extends SparkSuite with DocsWithDupsFixture {
     // words: abab x2, ab x1, cd x1
     // r1: (a,b) count 2·2+1 = 5 wins; r2: (ab,ab) 2; r3: (c,d) 1; r4: dry
     val docs = Seq((1L, "abab abab ab cd")).toDF("doc_id", "text")
-    val merges = Bpe.trainMerges(spark, docs, "text", rounds = 4,
-        checkpoint = false)
+    val merges = Bpe.trainMerges(spark, docs, "text", rounds = 4)
       .orderBy(col("round")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(merges.toSeq == Seq((1L, "a", "b", 5L), (2L, "ab", "ab", 2L),
@@ -689,7 +688,7 @@ class OperatorsEventsTextSpec extends SparkSuite with DocsWithDupsFixture {
     // encode: abab→1 sym, ab→1, cd→1; plus out-of-universe single chars
     val docs2 = Seq((1L, "abab abab ab cd"), (2L, "a x")).toDF("doc_id", "text")
     val enc = Bpe.encodeCorpus(docs2, "doc_id", "text",
-        Bpe.trainMerges(spark, docs, "text", rounds = 4, checkpoint = false))
+        Bpe.trainMerges(spark, docs, "text", rounds = 4))
       .orderBy(col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4)))

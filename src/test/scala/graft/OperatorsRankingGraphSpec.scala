@@ -389,8 +389,8 @@ class OperatorsRankingGraphSpec extends SparkSuite {
     assert(dupOut.toSeq == out.toSeq)
     // plan: the argmax is a partial-aggregable max_by, never a per-node
     // sort/window
-    val lp = graft.operators.Graph.labelPropagation(edges, "src", "dst",
-      rounds = 2, checkpoint = false)
+    val lp = graft.operators.Lineage.uncut(graft.operators.Graph.labelPropagation(edges, "src", "dst",
+      rounds = 2))
     lp.collect()
     val plan = lp.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(plan.toLowerCase.contains("partial_max_by"),
@@ -415,14 +415,25 @@ class OperatorsRankingGraphSpec extends SparkSuite {
     // the H-index is computed from the per-node value HISTOGRAM: the
     // per-edge rows collapse through a partial-aggregable groupBy before
     // any window, so the plan carries a partial_count for it and never a
-    // single-partition sort (checkpoint=false — localCheckpoint would
-    // truncate the visible plan to a Scan ExistingRDD)
-    val unCut = graft.operators.Graph.coreNumbers(edges, "src", "dst",
-      rounds = 2, checkpoint = false)
-    val plan = unCut.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    // single-partition sort (read inside Lineage.uncut — the shipped cut
+    // truncates the visible plan to a Scan ExistingRDD)
+    def planOf(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+    val plan = planOf(graft.operators.Lineage.uncut(
+      graft.operators.Graph.coreNumbers(edges, "src", "dst", rounds = 2)))
     assert(!plan.contains("SinglePartition"), s"unexpected SinglePartition:\n$plan")
     assert(plan.contains("partial_count") || plan.contains("partial count"),
       s"histogram counts must partial-aggregate map-side:\n$plan")
+    assert(!plan.contains("Scan ExistingRDD"), s"uncut plan must not be cut:\n$plan")
+    // both sides of the hook: outside it the shipped path cuts the edge
+    // table, and an exception thrown inside it still restores the cut
+    val cutPlan = planOf(graft.operators.Graph.coreNumbers(edges, "src", "dst", rounds = 2))
+    assert(cutPlan.contains("Scan ExistingRDD"), s"shipped plan must be cut:\n$cutPlan")
+    intercept[IllegalStateException](graft.operators.Lineage.uncut[Unit](
+      throw new IllegalStateException("inside uncut")))
+    assert(graft.operators.Lineage.cutting)
+    val afterPlan = planOf(graft.operators.Graph.coreNumbers(edges, "src", "dst", rounds = 2))
+    assert(afterPlan.contains("Scan ExistingRDD"), s"cut not restored:\n$afterPlan")
   }
 
   test("coreNumbers agrees with kCore on every k-slice of a deterministic graph") {
@@ -588,15 +599,14 @@ class OperatorsRankingGraphSpec extends SparkSuite {
     //     rawHub {1:100, 2:200, 3:100} → hub {1:50, 2:100, 3:50}
     // r2: rawAuth {3:150, 4:150} → auth {3:100, 4:100}; hubs repeat
     val edges = Seq((1L, 3L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("s", "d")
-    val out = Graph.hitsInt(edges, "s", "d", iterations = 2, scale = 100L,
-        checkpoint = false)
+    val out = Graph.hitsInt(edges, "s", "d", iterations = 2, scale = 100L)
       .orderBy(col("node")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq((1L, 50L, 0L), (2L, 100L, 0L),
       (3L, 50L, 100L), (4L, 0L, 100L)))
     // duplicate edges must not double-count (distinct contract)
     val dup = Graph.hitsInt(edges.union(edges), "s", "d", iterations = 2,
-        scale = 100L, checkpoint = false)
+        scale = 100L)
       .orderBy(col("node")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(dup.toSeq == out.toSeq)
@@ -609,20 +619,17 @@ class OperatorsRankingGraphSpec extends SparkSuite {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 3L), (5L, 6L))
       .toDF("s", "d")
     val seeds = Seq(Tuple1(1L)).toDF("node")
-    val out = Graph.bfsDistances(edges, "s", "d", seeds, maxHops = 2,
-        checkpoint = false)
+    val out = Graph.bfsDistances(edges, "s", "d", seeds, maxHops = 2)
       .orderBy(col("node")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     // shortcut wins: dist(3) = 1, so dist(4) = 2; island 5/6 absent
     assert(out.toSeq == Seq((1L, 0L), (2L, 1L), (3L, 1L), (4L, 2L)))
     // maxHops = 0 returns exactly the seed set
-    val only = Graph.bfsDistances(edges, "s", "d", seeds, maxHops = 0,
-        checkpoint = false).collect()
+    val only = Graph.bfsDistances(edges, "s", "d", seeds, maxHops = 0).collect()
     assert(only.map(r => (r.getLong(0), r.getLong(1))).toSeq == Seq((1L, 0L)))
     // multi-source: min over seeds
     val two = Graph.bfsDistances(edges, "s", "d",
-        Seq(Tuple1(1L), Tuple1(3L)).toDF("node"), maxHops = 2,
-        checkpoint = false)
+        Seq(Tuple1(1L), Tuple1(3L)).toDF("node"), maxHops = 2)
       .orderBy(col("node")).collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     assert(two.toSeq == Seq((1L, 0L), (2L, 1L), (3L, 0L), (4L, 1L)))

@@ -530,7 +530,7 @@ class OperatorsSimilaritySpec extends SparkSuite {
     val docs = Seq((1L, "a b c"), (2L, "b c d e"), (3L, "a e"), (4L, "b c"))
       .toDF("doc_id", "text")
     val out = Coverage.maxCoverageSelect(spark, docs, "doc_id", "text",
-        shingleLen = 1, rounds = 3, checkpoint = false)
+        shingleLen = 1, rounds = 3)
       .orderBy(col("round")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     // r1: d2 covers 4; r2: d1 and d3 both add {a} -> tie, d1 wins;

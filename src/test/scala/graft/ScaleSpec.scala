@@ -478,9 +478,9 @@ class ScaleSpec extends SparkSuite {
   test("pageRank plan: cached co-partitioned edges, no cartesian, no single-partition collapse") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L)).toDF("src", "dst")
-    // checkpoint=false keeps the full 2-round lineage visible to the assert
-    val pr = graft.operators.Graph.pageRankInt(edges, "src", "dst",
-      iterations = 2, checkpoint = false)
+    // uncut keeps the full 2-round lineage visible to the assert
+    val pr = graft.operators.Lineage.uncut(graft.operators.Graph.pageRankInt(edges, "src", "dst",
+      iterations = 2))
     pr.collect()
     val plan = pr.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoop"),
@@ -786,8 +786,8 @@ class ScaleSpec extends SparkSuite {
     // HITS: half-round sums partial-aggregate; the max attaches as a
     // 1-row broadcast, never a data-sized exchange to one partition
     val edges = (1L to 3000L).map(i => (i % 97, 100 + i % 41)).toDF("s", "d")
-    val hits = graft.operators.Graph.hitsInt(edges, "s", "d",
-      iterations = 2, checkpoint = false)
+    val hits = graft.operators.Lineage.uncut(graft.operators.Graph.hitsInt(edges, "s", "d",
+      iterations = 2))
     hits.collect()
     // full AQE string (final + initial): materialized stages print
     // compactly in the final section, hiding map-side aggregates
@@ -799,8 +799,8 @@ class ScaleSpec extends SparkSuite {
 
     // BFS: frontier expansion is equi-join + partial-aggregable distinct
     // + anti-join — no cartesian, no window
-    val bfs = graft.operators.Graph.bfsDistances(edges, "s", "d",
-      Seq(Tuple1(1L), Tuple1(2L)).toDF("node"), maxHops = 3, checkpoint = false)
+    val bfs = graft.operators.Lineage.uncut(graft.operators.Graph.bfsDistances(edges, "s", "d",
+      Seq(Tuple1(1L), Tuple1(2L)).toDF("node"), maxHops = 3))
     bfs.collect()
     val bfsPlan = bfs.queryExecution.executedPlan.toString
     assert(!bfsPlan.contains("CartesianProduct") && !bfsPlan.contains("Window"),
@@ -838,7 +838,7 @@ class ScaleSpec extends SparkSuite {
     // never shuffles (keys only), nothing cartesian
     val docs = (1L to 300L).map(i => (i, s"w${i % 7} w${i % 11} w${i % 13} tail$i")).toDF("doc_id", "text")
     val cov = graft.operators.Coverage.maxCoverageSelect(spark, docs,
-      "doc_id", "text", shingleLen = 1, rounds = 2, checkpoint = false)
+      "doc_id", "text", shingleLen = 1, rounds = 2)
     // the result df is a driver-built table; assert on the ROUND plan by
     // rebuilding one round's frame shape instead
     val inc = docs.select(col("doc_id").as("_doc"),
@@ -905,8 +905,8 @@ class ScaleSpec extends SparkSuite {
     // Markov: the lag window is partitioned BY KEY — a data-sized
     // single-partition window would serialize the whole corpus
     val ev = (1L to 6000L).map(i => (i % 37, i, s"s${i % 4}")).toDF("k", "seq", "st")
-    val mk = graft.operators.Markov.transitionMatrix(ev, col("k"), col("st"),
-      Seq(col("seq")), checkpoint = false)
+    val mk = graft.operators.Lineage.uncut(graft.operators.Markov.transitionMatrix(ev, col("k"), col("st"),
+      Seq(col("seq"))))
     mk.collect()
     val mPlan = mk.queryExecution.executedPlan.toString
     val mkSinglePartWindows = mPlan.linesIterator
@@ -930,8 +930,8 @@ class ScaleSpec extends SparkSuite {
     // ssspInt one-round frame: candidate relaxation is an equi-join
     // against src-repartitioned edges with a partial-aggregable min
     val edges = (1L to 3000L).map(i => (i % 211, (i * 7) % 211, i % 9 + 1)).toDF("src", "dst", "w")
-    val sp = graft.operators.Graph.ssspInt(edges, "src", "dst", "w",
-      Seq(1L).toDF("node"), rounds = 2, checkpoint = false)
+    val sp = graft.operators.Lineage.uncut(graft.operators.Graph.ssspInt(edges, "src", "dst", "w",
+      Seq(1L).toDF("node"), rounds = 2))
     sp.collect()
     val sPlan = sp.queryExecution.executedPlan.toString
     assert(!sPlan.contains("CartesianProduct"), s"sssp must not go cartesian:\n$sPlan")
@@ -942,7 +942,7 @@ class ScaleSpec extends SparkSuite {
     val items = (0L to 400L).map(i =>
       (i, Seq.tabulate(8)(d => ((i * 31 + d * 17) % 13).toFloat))).toDF("vec_id", "embedding")
     val mmr = graft.operators.Mmr.mmrSelect(spark, items, "vec_id", "embedding",
-      queryId = 0L, k = 3, checkpoint = false)
+      queryId = 0L, k = 3)
     assert(mmr.count() == 3L)
     // the selection is driver-built; assert on a round-2 frame rebuilt
     // with the operator's own shapes: rel + broadcast selected
@@ -1088,8 +1088,8 @@ class ScaleSpec extends SparkSuite {
     val rnd = new scala.util.Random(29)
     val mwIn = (1 to 6000).map(_ =>
       (rnd.nextInt(500).toLong, rnd.nextBoolean())).toDF("v", "p")
-    val mw = graft.operators.Eval.mannWhitney(mwIn, col("v"), col("p"),
-      bucketOf = v => shiftright(v, 5), checkpoint = false)
+    val mw = graft.operators.Lineage.uncut(graft.operators.Eval.mannWhitney(mwIn, col("v"), col("p"),
+      bucketOf = v => shiftright(v, 5)))
     mw.collect()
     val mwPlan = mw.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(!mwPlan.contains("CartesianProduct"), s"MW stays equi/broadcast:\n$mwPlan")
@@ -1251,8 +1251,8 @@ class ScaleSpec extends SparkSuite {
     val rnd = new scala.util.Random(31)
     val pts = (0L to 4L).flatMap { g =>
       (1 to 2000).map(_ => (g, rnd.nextInt(300).toLong + g)) }.toDF("g", "v")
-    val jt = graft.operators.Eval.jonckheereTerpstra(pts, col("g"), col("v"),
-      bucketOf = v => shiftright(v, 4), checkpoint = false)
+    val jt = graft.operators.Lineage.uncut(graft.operators.Eval.jonckheereTerpstra(pts, col("g"), col("v"),
+      bucketOf = v => shiftright(v, 4)))
     jt.collect()
     val plan = jt.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     // the only data-sized pass is the (group, value) cell aggregation —
@@ -1275,9 +1275,9 @@ class ScaleSpec extends SparkSuite {
 
     // mood median: one partial-agg cell pass; the median read and the
     // 2×k table never open a data-sized single-partition window
-    val mm = graft.operators.Eval.moodMedianTest(
+    val mm = graft.operators.Lineage.uncut(graft.operators.Eval.moodMedianTest(
       (1 to 4000).map(i => (s"g${i % 3}", rnd.nextInt(200).toLong)).toDF("g", "v"),
-      "g", col("v"), bucketOf = v => shiftright(v, 4), checkpoint = false)
+      "g", col("v"), bucketOf = v => shiftright(v, 4)))
     mm.collect()
     val mmPlan = mm.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(mmPlan.contains("partial_count") || mmPlan.contains("partial_sum"),
@@ -1286,9 +1286,9 @@ class ScaleSpec extends SparkSuite {
 
     // mood scale: mannWhitney's shape — the only unpartitioned window is
     // the model-sized bucket-offset spine
-    val ms = graft.operators.Eval.moodScaleTest(
+    val ms = graft.operators.Lineage.uncut(graft.operators.Eval.moodScaleTest(
       (1 to 4000).map(i => (rnd.nextInt(300).toLong, i % 2 == 0)).toDF("v", "p"),
-      col("v"), col("p"), bucketOf = v => shiftright(v, 4), checkpoint = false)
+      col("v"), col("p"), bucketOf = v => shiftright(v, 4)))
     ms.collect()
     val msPlan = ms.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(msPlan.contains("partial_count") || msPlan.contains("partial_sum"),
@@ -1327,18 +1327,18 @@ class ScaleSpec extends SparkSuite {
       assert(winLines.forall(l => !l.contains("SinglePartition") ||
         l.contains("_b")), s"$name unpartitioned window off the spine:\n$plan")
     }
-    check("wasserstein1", graft.operators.Eval.wasserstein1(
-      pts, col("v"), col("p"), bucketOf = v => shiftright(v, 4), checkpoint = false))
-    check("cramerVonMises", graft.operators.Eval.cramerVonMises(
-      pts, col("v"), col("p"), bucketOf = v => shiftright(v, 4), checkpoint = false))
-    check("energyDistance", graft.operators.Eval.energyDistance(
-      pts, col("v"), col("p"), bucketOf = v => shiftright(v, 4), checkpoint = false))
+    check("wasserstein1", graft.operators.Lineage.uncut(graft.operators.Eval.wasserstein1(
+      pts, col("v"), col("p"), bucketOf = v => shiftright(v, 4))))
+    check("cramerVonMises", graft.operators.Lineage.uncut(graft.operators.Eval.cramerVonMises(
+      pts, col("v"), col("p"), bucketOf = v => shiftright(v, 4))))
+    check("energyDistance", graft.operators.Lineage.uncut(graft.operators.Eval.energyDistance(
+      pts, col("v"), col("p"), bucketOf = v => shiftright(v, 4))))
     // conover adds the k-row group-center broadcast join and the
     // cells->score equi join; same histogram discipline applies
     val gpts = (1 to 4000).map(i =>
       (s"g${i % 4}", rnd.nextInt(300).toLong)).toDF("g", "y")
-    check("conoverSquaredRanks", graft.operators.Eval.conoverSquaredRanks(
-      gpts, "g", col("y"), bucketOf = v => shiftright(v, 4), checkpoint = false))
+    check("conoverSquaredRanks", graft.operators.Lineage.uncut(graft.operators.Eval.conoverSquaredRanks(
+      gpts, "g", col("y"), bucketOf = v => shiftright(v, 4))))
   }
 
   test("semDedup/dsirSelect plans: cluster-bounded pair join, broadcast model scoring, TakeOrdered cut") {
@@ -1403,9 +1403,9 @@ class ScaleSpec extends SparkSuite {
 
     // AD: jonckheere's dense-frame shape — partial-agg cells, every
     // unpartitioned window on a model-sized spine, no pair join
-    val ad = graft.operators.Eval.andersonDarlingK(
+    val ad = graft.operators.Lineage.uncut(graft.operators.Eval.andersonDarlingK(
       (1 to 4000).map(i => (s"g${i % 3}", rnd.nextInt(200).toLong)).toDF("g", "v"),
-      "g", col("v"), bucketOf = v => shiftright(v, 4), checkpoint = false)
+      "g", col("v"), bucketOf = v => shiftright(v, 4)))
     ad.collect()
     val adPlan = ad.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
     assert(adPlan.contains("partial_count") || adPlan.contains("partial_sum"),

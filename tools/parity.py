@@ -11,7 +11,7 @@ set, byte-compatible: per query {"rows_match", "schema_match",
 commits its own hard per-query record even when the driver-side
 artifact comes back zeroed (the r11/r12 `{}` incident).
 """
-import json, sys, os
+import json, sys, os, time
 import duckdb
 import pandas as pd
 
@@ -53,34 +53,34 @@ if os.path.exists(manifest_path):
     selected = set(json.load(open(manifest_path)).get("per_query", {}))
 else:
     selected = set(dumped)
-for name in sorted(set(dumped) | selected):
+def check(name):
     if name not in dumped:
         fails.append((name, "missing output (Verify failed?)"))
         record(name, None, None, None, None, None, "missing_output")
-        continue
+        return
     got = pd.read_parquet(os.path.join(out_dir, name))
     if name not in oracle:
         skips.append((name, len(got)))
         record(name, None, None, None, len(got), None, "no_oracle")
-        continue
+        return
     try:
         exp = con.sql(oracle[name]).df()
     except Exception as e:
         fails.append((name, f"oracle SQL error: {e}"))
         record(name, None, None, None, len(got), None,
                f"oracle SQL error: {e}")
-        continue
+        return
     got = got.reindex(sorted(got.columns), axis=1)
     exp = exp.reindex(sorted(exp.columns), axis=1)
     if list(got.columns) != list(exp.columns):
         fails.append((name, f"columns: got {list(got.columns)} vs oracle {list(exp.columns)}"))
         record(name, len(got) == len(exp), False, False,
                len(got), len(exp), "schema_mismatch")
-        continue
+        return
     if len(got) != len(exp):
         fails.append((name, f"rows: got {len(got)} vs oracle {len(exp)}"))
         record(name, False, True, False, len(got), len(exp), "row_count")
-        continue
+        return
     # driver-style: sort rows for stability, then exact compare
     got_s = got.sort_values(by=list(got.columns)).reset_index(drop=True)
     exp_s = exp.sort_values(by=list(exp.columns)).reset_index(drop=True)
@@ -109,6 +109,14 @@ for name in sorted(set(dumped) | selected):
     else:
         passes.append((name, len(got)))
         record(name, True, True, True, len(got), len(exp), None)
+
+# one flushed stderr line per query as it finishes, so a slow oracle is
+# named while the run is still going (stdout carries only the report)
+for name in sorted(set(dumped) | selected):
+    t0 = time.monotonic()
+    check(name)
+    print(f"[parity] {name} {time.monotonic() - t0:.1f}s",
+          file=sys.stderr, flush=True)
 
 for n, r in passes: print(f"PASS  {n} ({r} rows)")
 for n, r in skips:  print(f"SKIP  {n} (no oracle, {r} rows)")
