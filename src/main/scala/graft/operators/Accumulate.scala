@@ -34,9 +34,4 @@ object Accumulate {
   def runningSum(df: DataFrame, valueCol: Column, partition: Seq[Column],
                  order: Seq[Column], as: String): DataFrame =
     running(df, sum(valueCol), partition, order, as)
-
-  /** Running count (1-based row index within key). */
-  def runningCount(df: DataFrame, partition: Seq[Column],
-                   order: Seq[Column], as: String): DataFrame =
-    running(df, count(lit(1)), partition, order, as)
 }

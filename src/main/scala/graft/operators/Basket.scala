@@ -48,7 +48,7 @@ object Basket {
         Seq("item_a"))
       .join(items.select(col("_i").as("item_b"), col("_si").as("n_b")),
         Seq("item_b"))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       // DECIMAL(38): s_ab·N·10⁶ is ~10²⁶ at 10¹⁰ sessions — far past 2⁶³
       .select(col("item_a"), col("item_b"), col("n_both"), col("n_a"), col("n_b"),
         col("_n").as("n_sessions"),

@@ -48,7 +48,7 @@ object Boilerplate {
     val dfTab = perDoc.groupBy(col("tok")).agg(count(lit(1)).as("df"))
     val total = docs.select(count(lit(1)).as("_n_docs"))
     // single-row frame: the cross join is a broadcast nested loop of one row
-    dfTab.crossJoin(broadcast(total))
+    dfTab.crossJoin(total)
       .where(col("df") * lit(dfDen) >= col("_n_docs") * lit(dfNum))
       .select(col("tok"), col("df"))
   }
@@ -73,7 +73,7 @@ object Boilerplate {
     val perDoc = docs.select(col(idCol).as("_id"),
       explode(array_distinct(Text.tokens(col(textCol)))).as("tok"))
     perDoc.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(docs.select(count(lit(1)).as("n_docs"))))
+      .crossJoin(docs.select(count(lit(1)).as("n_docs")))
   }
 
   /** Absorb a document batch into persisted [[dfStats]] WITHOUT
@@ -107,7 +107,7 @@ object Boilerplate {
                      shingleLen: Int): DataFrame =
     shinglePostings(docs, idCol, textCol, shingleLen)
       .groupBy(col("sh")).agg(count(lit(1)).as("df"))
-      .crossJoin(broadcast(docs.select(count(lit(1)).as("n_docs"))))
+      .crossJoin(docs.select(count(lit(1)).as("n_docs")))
 
   /** Absorb a batch into persisted [[shingleDfStats]] — identical merge
     * algebra to [[updateDfStats]] (df and n_docs additive over disjoint
@@ -220,7 +220,7 @@ object Boilerplate {
         Seq(keyCol), "full_outer")
       .select(col(keyCol),
         (coalesce(col("df"), lit(0L)) + coalesce(col("_dfb"), lit(0L))).as("df"))
-      .crossJoin(broadcast(baseN)).crossJoin(broadcast(batchN))
+      .crossJoin(baseN).crossJoin(batchN)
       .select(col(keyCol), col("df"),
         (coalesce(col("_bn"), lit(0L)) + col("_cn")).as("n_docs"))
   }

@@ -166,7 +166,7 @@ object Checks {
     val n = counts.agg(coalesce(sum(col("_o")), lit(0L)).as("_n"))
     val probs = array((1 to 9).map(d => lit(math.log10(1.0 + 1.0 / d))): _*)
     spine.join(counts, Seq("digit"), "left")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("digit"), coalesce(col("_o"), lit(0L)).as("n_obs"),
         col("_n"),
         (col("_n").cast("double") *
@@ -238,7 +238,7 @@ object Checks {
         coalesce(col("_tn"), lit(0L)).as("tgt_n"))
     val totals = joined.agg(
       sum(col("ref_n")).as("_rt"), sum(col("tgt_n")).as("_tt"))
-    joined.crossJoin(broadcast(totals))
+    joined.crossJoin(totals)
       .withColumn("term_unats", expr(
         s"""CAST(round(1e6 * (
               (CAST(ref_n + 1 AS DOUBLE) / CAST(_rt + $bins AS DOUBLE)

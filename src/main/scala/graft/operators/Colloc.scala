@@ -39,7 +39,7 @@ object Colloc {
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_pair"))
     val uni = base.select(explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
-    val total = broadcast(uni.agg(sum(col("cu")).as("n_total")))
+    val total = uni.agg(sum(col("cu")).as("n_total"))
 
     pairs
       .where(col("c_pair") >= minCount)
@@ -81,7 +81,7 @@ object Colloc {
       .localCheckpoint() // fans into both totals and the score
     val totals = merged.agg(sum(col("c_a")).as("_na"), sum(col("c_b")).as("_nb"))
     merged
-      .crossJoin(broadcast(totals))
+      .crossJoin(totals)
       // fixed left-associated shape, one quantization per term
       .withColumn("keyness_unats",
         round((log((col("c_a").cast("double") + lit(0.5)) /

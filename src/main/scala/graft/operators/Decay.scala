@@ -80,7 +80,7 @@ object Decay {
       } else {
         // global reference: 1-row aggregate broadcast-joined onto the scan
         val ref = stepped.agg(max(col("_step")).as("_ref"))
-        stepped.crossJoin(broadcast(ref))
+        stepped.crossJoin(ref)
       }
     if (refPerKey) {
       // two-phase: per-key (step, Σqv) partials first, then the key's own

@@ -69,16 +69,6 @@ object Dedup {
       sequence(lit(0), lit(k - 1)),
       i => array_min(transform(array_distinct(shingles), s => md5(concat(s, lit("|"), i.cast("string"))))))
 
-  /** LSH band keys: split the k-row signature into `bands` bands of
-    * `k/bands` rows, hash each band. Docs sharing any band key are
-    * candidates. */
-  def lshBandKeys(signature: Column, k: Int, bands: Int): Column = {
-    val rows = k / bands
-    transform(
-      sequence(lit(0), lit(bands - 1)),
-      b => concat(b.cast("string"), lit(":"), md5(concat_ws("|", slice(signature, b * rows + 1, lit(rows))))))
-  }
-
   /** Modulus of the two-hash min-hash family: largest prime below 2³². */
   private[graft] val MinHashP = 4294967291L
 
@@ -344,10 +334,6 @@ object Dedup {
     docs.select(col(idCol).as("id")).join(summed, Seq("id"), "left")
       .select(col("id"), coalesce(col("simhash"), lit("0" * bits)).as("simhash"))
   }
-
-  /** Hamming distance between two equal-length '0'/'1' strings. */
-  def hammingDistance(a: Column, b: Column): Column =
-    size(filter(zip_with(split(a, ""), split(b, ""), (x, y) => x =!= y), d => d)).cast("long")
 
   /** SimHash near-dup pairs via pigeonhole multi-block indexing (the
     * fingerprint-dedup scheme of Manku/Jain/Das Sarma, "Detecting

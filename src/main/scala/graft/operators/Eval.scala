@@ -186,14 +186,14 @@ object Eval {
     val uv = pair
       .join(hx.select(col("_x"), col("_u")), Seq("_x"))
       .join(hy.select(col("_y"), col("_v")), Seq("_y"))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("_c"),
         (col("_u") - col("_n")).as("_cu"), (col("_v") - col("_n")).as("_cv"))
       .agg(
         sum(expr("CAST(_c AS DECIMAL(38,0)) * _cu * _cv")).as("_suv"),
         sum(expr("CAST(_c AS DECIMAL(38,0)) * _cu * _cu")).as("_suu"),
         sum(expr("CAST(_c AS DECIMAL(38,0)) * _cv * _cv")).as("_svv"))
-    uv.crossJoin(broadcast(n))
+    uv.crossJoin(n)
       .select(col("_n").as("n"),
         col("_suv").cast("double").as("s_uv"),
         col("_suu").cast("double").as("s_uu"),
@@ -329,8 +329,8 @@ object Eval {
       .agg(coalesce(sum(pairs2(col("_t"))), lit(0).cast(dec)).as("_n1"))
     val ty = cells.groupBy(col("_y")).agg(sum(col("_c")).as("_t"))
       .agg(coalesce(sum(pairs2(col("_t"))), lit(0).cast(dec)).as("_n2"))
-    ties.crossJoin(broadcast(tx)).crossJoin(broadcast(ty))
-      .crossJoin(broadcast(discordant))
+    ties.crossJoin(tx).crossJoin(ty)
+      .crossJoin(discordant)
       .select(col("_n"), pairs2(col("_n")).as("_n0"), col("_n1"),
         col("_n2"), coalesce(col("_n3"), lit(0).cast(dec)).as("_n3"),
         col("_D"))
@@ -441,13 +441,13 @@ object Eval {
     cells
       .join(broadcast(ra), Seq("_a"))
       .join(broadcast(cb), Seq("_b"))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("_a"), col("_b"),
         expr("(CAST(_o AS DECIMAL(38,0)) * _o * _n * 1000000) DIV " +
           "(CAST(_ra AS DECIMAL(38,0)) * _cb)").as("_t"))
       .agg(countDistinct(col("_a")).as("n_a"), countDistinct(col("_b")).as("n_b"),
         sum(col("_t")).as("_st"))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("_n").as("n"), col("n_a"), col("n_b"),
         ((col("n_a") - 1) * (col("n_b") - 1)).as("dof"),
         (col("_st") - expr("CAST(_n AS DECIMAL(38,0)) * 1000000"))
@@ -482,7 +482,7 @@ object Eval {
     cells
       .join(broadcast(ra), Seq("_a"))
       .join(broadcast(cb), Seq("_b"))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       // fixed left-associated double shape (the Colloc PMI site)
       .withColumn("_pmi",
         round(log(col("_o").cast("double") * col("_n").cast("double") /
@@ -529,7 +529,7 @@ object Eval {
     val e2 = ra.join(cb, col("_a") === col("_b"))
       .agg(coalesce(sum(expr("CAST(_ra AS DECIMAL(38,0)) * _cb")),
         lit(0).cast(dec)).as("_e2"))
-    n.crossJoin(broadcast(o)).crossJoin(broadcast(e2))
+    n.crossJoin(o).crossJoin(e2)
       .select(col("_n").as("n"), col("_agree").as("observed_agree"),
         col("_e2").cast("double").as("expected_pairs"),
         when(col("_n").cast(dec) * col("_n") > col("_e2"),
@@ -824,7 +824,7 @@ object Eval {
       .join(broadcast(offsets), Seq("_b"))
       .withColumn("_cuma", col("_offa") + sum(col("_ha")).over(wIn))
       .withColumn("_cumb", col("_offb") + sum(col("_hb")).over(wIn))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(col("_na"), col("_nb"),
         abs(col("_cuma") * col("_nb") - col("_cumb") * col("_na")).as("_gap"))
       .groupBy(col("_na"), col("_nb"))
@@ -1291,7 +1291,7 @@ object Eval {
     perGroup
       .agg(sum(col("_ng")).as("_n"), count(lit(1)).as("_k"),
         sum(col("_tg")).as("_st"))
-      .crossJoin(broadcast(ties)) // 1-row scalar attach
+      .crossJoin(ties)
       .select(col("_n").as("n"), col("_k").as("k_groups"),
         col("_tt").cast("double").as("t_ties"),
         when(col("_k") >= 2L && col("_n") >= 2L,
@@ -1358,7 +1358,7 @@ object Eval {
     // dense k·V frame: every (group, value) cell, absent ones at 0 —
     // LB/LE need cumulatives evaluated at values the group may not have
     val dense = hist.select(col("_v"), col("_b"))
-      .crossJoin(broadcast(groups))
+      .crossJoin(broadcast(groups)) // k grouped rows, estimated at the child's size
       .join(cells, Seq("_g", "_v"), "left")
       .na.fill(0L, Seq("_c"))
     // within-group cumulative-below: two-level prefix sum per (g, bucket)
@@ -1397,7 +1397,7 @@ object Eval {
         (col("_t") - lit(2L))), lit(0).cast(dec)).as("_t3"),
       coalesce(sum(col("_t").cast(dec) * (col("_t") - lit(1L))),
         lit(0).cast(dec)).as("_t2"))
-    ga.crossJoin(broadcast(s2)).crossJoin(broadcast(ta)) // 1-row attaches
+    ga.crossJoin(s2).crossJoin(ta)
       .select(col("_n"), col("_k"), col("_s2"),
         (lit(2L).cast(dec) * col("_s2") -
           (col("_n").cast(dec) * col("_n") - col("_sn2"))).as("_num2"),
@@ -1461,7 +1461,7 @@ object Eval {
     val hist = twoSampleHist(df, scoreCol, positive, bucketOf)
     val tot = hist.agg(coalesce(sum(col("_t")), lit(0L)).as("_n"))
     cumBefore(hist)
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       .withColumn("_d", lit(2L) * col("_cb") + col("_t") - col("_n"))
       .agg(
         coalesce(sum(col("_pc")), lit(0L)).as("_n1"),
@@ -1522,7 +1522,7 @@ object Eval {
     val hist = twoSampleHist(df, scoreCol, positive, bucketOf)
     val tot = hist.agg(coalesce(sum(col("_t")), lit(0L)).as("_n"))
     cumBefore(hist)
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       // folded block sum, doubled: lo..hi split at the kink M DIV 2
       .withColumn("_lo", col("_cb") + lit(1L))
       .withColumn("_hi", col("_cb") + col("_t"))
@@ -1595,10 +1595,10 @@ object Eval {
     val tot = hist.agg(coalesce(sum(col("_t")), lit(0L)).as("_n"))
     val med = cumBefore(hist)
       .withColumn("_cum", col("_cb") + col("_t"))
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       .where(col("_cum") >= expr("(_n + 1) DIV 2"))
       .agg(min(col("_v")).as("_m")) // grand lower median, 1 row
-    val pg = cells.crossJoin(broadcast(med))
+    val pg = cells.crossJoin(med)
       .groupBy(col("_g"))
       .agg(sum(col("_c")).as("_ng"),
         sum(when(col("_v") > col("_m"), col("_c")).otherwise(lit(0L))).as("_ag"))
@@ -1614,7 +1614,7 @@ object Eval {
       // division is exact and the trailing cast just drops the .0 scale
       ((x - pmod(x, den)) / den).cast(dec)
     }
-    pg.crossJoin(broadcast(totals)).crossJoin(broadcast(med))
+    pg.crossJoin(totals).crossJoin(med)
       .withColumn("_tm",
         when(col("_a") > 0L && col("_a") < col("_nn") && col("_k") >= 2L,
           term(col("_ag"), col("_a"), col("_ng"), col("_nn")) +
@@ -1867,7 +1867,7 @@ object Eval {
       .withColumn("_ct", col("_offT") + sum(col("_t")).over(wIn))
       .withColumn("_next",
         coalesce(lead(col("_v"), 1).over(wLead), col("_nbmin")))
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       .withColumn("_d",
         (col("_n") - col("_n1")).cast(dec) * col("_c1") -
           col("_n1").cast(dec) * (col("_ct") - col("_c1")))
@@ -1923,7 +1923,7 @@ object Eval {
       .join(broadcast(spine), Seq("_b"))
       .withColumn("_c1", col("_offP") + sum(col("_pc")).over(wIn))
       .withColumn("_ct", col("_offT") + sum(col("_t")).over(wIn))
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       .withColumn("_d",
         (col("_n") - col("_n1")).cast(dec) * col("_c1") -
           col("_n1").cast(dec) * (col("_ct") - col("_c1")))
@@ -1997,7 +1997,7 @@ object Eval {
       // gap-to-all-previous partial sums, per cohort
       .withColumn("_g1", col("_v").cast(dec) * col("_p1c") - col("_p1s"))
       .withColumn("_g2", col("_v").cast(dec) * col("_p2c") - col("_p2s"))
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       .agg(
         first(col("_n1")).as("_np"),
         first(col("_n")).as("_nn"),
@@ -2084,7 +2084,7 @@ object Eval {
       .groupBy(col("_g"))
       .agg(sum(col("_c")).as("_ng"),
         sum(col("_c").cast(dec) * col("_aq")).as("_sq"))
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       .withColumn("_num", col("_n").cast(dec) * col("_sq") -
         col("_ng").cast(dec) * col("_a"))
       // ⌊10⁶·num²/n_g⌋ — num² nonneg, so the pmod subtract makes the
@@ -2152,7 +2152,7 @@ object Eval {
         (lit(2L) * col("_cb") + col("_t")).as("_b2"))
     // dense k·V frame: M must be evaluated at values the group lacks
     val dense = hist.select(col("_v"), col("_b"))
-      .crossJoin(broadcast(groups))
+      .crossJoin(broadcast(groups)) // k grouped rows, estimated at the child's size
       .join(cells, Seq("_g", "_v"), "left")
       .na.fill(0L, Seq("_c"))
     val wInG = Window.partitionBy(col("_g"), col("_b")).orderBy(col("_v"))
@@ -2173,7 +2173,7 @@ object Eval {
     val perGroup = cum
       .join(vcum, Seq("_v"))
       .join(broadcast(ng), Seq("_g"))
-      .crossJoin(broadcast(tot)) // 1-row scalar attach
+      .crossJoin(tot)
       .withColumn("_x", col("_n").cast(dec) * col("_m2") -
         col("_ng").cast(dec) * col("_b2"))
       .withColumn("_dq", col("_b2").cast(dec) *
@@ -2276,8 +2276,8 @@ object Eval {
       .agg(sum(col("_s4")).as("_sg"))
       .agg(count(lit(1)).as("_k"),
         coalesce(sum(col("_sg") * col("_sg")), lit(0).cast(dec)).as("_sb"))
-      .crossJoin(broadcast(tot)) // 1-row attaches
-      .crossJoin(broadcast(nBlocks))
+      .crossJoin(tot)
+      .crossJoin(nBlocks)
       .withColumn("_den", col("_n").cast(dec) * col("_a16") - col("_sb"))
       .select(col("_n").as("n_blocks"), col("_k").as("k_groups"),
         col("_sb").cast("double").as("sb"),
@@ -2340,8 +2340,8 @@ object Eval {
         (col("_ss") - col("_r") * lit(k + 1L))).as("_d2"))
       .agg(count(lit(1)).as("_t2"),
         coalesce(sum(col("_d2")), lit(0).cast(dec)).as("_num"))
-      .crossJoin(broadcast(a4))     // 1-row attaches
-      .crossJoin(broadcast(blocks))
+      .crossJoin(a4)
+      .crossJoin(blocks)
       .withColumn("_den",
         col("_a4") - col("_nb").cast(dec) * lit(k.toLong * (k + 1L) * (k + 1L)))
       .select(col("_nb").as("n_blocks"), col("_t2").as("t_treatments"),
@@ -2410,7 +2410,7 @@ object Eval {
       .agg(count(lit(1)).as("_n"),
         coalesce(sum(col("_nb4")), lit(0).cast(dec)).as("_num4"),
         coalesce(sum(col("_db")), lit(0).cast(dec)).as("_dd"))
-      .crossJoin(broadcast(cSum)) // 1-row attach
+      .crossJoin(cSum)
       .select(col("_n").as("n_blocks"), lit(k).as("k_groups"),
         col("_num4").cast("double").as("num4"),
         when(lit(k) >= 2L && col("_dd") > 0 && col("_cc") > 0,
@@ -2461,7 +2461,7 @@ object Eval {
         coalesce(sum(col("_r")), lit(0L)).as("_rt"),
         coalesce(sum(col("_r").cast(dec) * col("_r")), lit(0).cast(dec))
           .as("_rr"))
-      .crossJoin(broadcast(colSums)) // 1-row attach
+      .crossJoin(colSums)
       .withColumn("_den", lit(k).cast(dec) * col("_rt") - col("_rr"))
       .select(col("_n").as("n_blocks"), lit(k).as("k_treatments"),
         when(lit(k) >= 2L && col("_den") > 0,

@@ -524,8 +524,8 @@ object Graph {
     // sort-merge plan would sort it; hashing the node-bounded adjacency
     // side instead is the guide §3.1 build-side choice.
     // deg is NODE-cardinality, consumed by BOTH endpoint attaches — cut it
-    // once. The broadcast is GATED on its exact materialized count (the
-    // Similarity.broadcastRowBudget doctrine): an unconditional hint was a
+    // once. The broadcast is GATED on its exact materialized count
+    // (Broadcast.rowBudget): an unconditional hint was a
     // driver/executor OOM on a billions-of-node graph (r13 advice), while
     // no hint at all left the static planner on SortMergeJoin — sorting
     // the batch side twice, measured 4.8->14.1 s at sf0.1 (r14). With the
@@ -533,11 +533,12 @@ object Graph {
     // any graph small enough that this operator isn't shuffle-bound
     // anyway); past the budget it falls back to the shuffled equi-join.
     val deg = Lineage.cut(adj.groupBy(col("node")).agg(count(lit(1)).as("_d")))
-    val degFits = deg.count() <= (1L << 20)
-    def maybeB(df: DataFrame): DataFrame = if (degFits) broadcast(df) else df
+    val nDeg = deg.count()
     val bases = fresh.select(col("a").as("bu"), col("b").as("bv"))
-      .join(maybeB(deg.select(col("node").as("bu"), col("_d").as("_du"))), Seq("bu"))
-      .join(maybeB(deg.select(col("node").as("bv"), col("_d").as("_dv"))), Seq("bv"))
+      .join(Broadcast.ifFits(deg.select(col("node").as("bu"), col("_d").as("_du")), nDeg),
+        Seq("bu"))
+      .join(Broadcast.ifFits(deg.select(col("node").as("bv"), col("_d").as("_dv")), nDeg),
+        Seq("bv"))
       .select(col("bu"), col("bv"),
         when(col("_du") <= col("_dv"), col("bu")).otherwise(col("bv")).as("lo"),
         when(col("_du") <= col("_dv"), col("bv")).otherwise(col("bu")).as("hi"))
@@ -607,7 +608,7 @@ object Graph {
         .join(scores.select(col("node").as("src"), col("hub_fp")), Seq("src"))
         .groupBy(col("dst")).agg(sum(col("hub_fp")).as("raw")))
       val auth = rawAuth
-        .crossJoin(broadcast(rawAuth.agg(max(col("raw")).as("mx"))))
+        .crossJoin(rawAuth.agg(max(col("raw")).as("mx")))
         .select(col("dst").as("node"),
           expr(s"(raw * ${scale}L) DIV mx").as("auth_fp"))
       // hub half-round: pull the NEW authority mass back along out-edges
@@ -615,7 +616,7 @@ object Graph {
         .join(auth.select(col("node").as("dst"), col("auth_fp")), Seq("dst"))
         .groupBy(col("src")).agg(sum(col("auth_fp")).as("raw")))
       val hub = rawHub
-        .crossJoin(broadcast(rawHub.agg(max(col("raw")).as("mx"))))
+        .crossJoin(rawHub.agg(max(col("raw")).as("mx")))
         .select(col("src").as("node"),
           expr(s"(raw * ${scale}L) DIV mx").as("hub_fp"))
       // scores stays LAZY: its one extra re-execution (next round's

@@ -63,7 +63,7 @@ object LmScore {
     val uni = base.select(explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("cu"))
     val big = docBg.groupBy(col("w1"), col("w2")).agg(sum(col("m")).as("cb"))
-    val vocab = broadcast(uni.agg(count(lit(1)).as("v")))
+    val vocab = uni.agg(count(lit(1)).as("v"))
 
     val scored = docBg
       .join(big, Seq("w1", "w2"))
@@ -175,7 +175,7 @@ object LmScore {
         coalesce(col("cb"), lit(0L)).as("cb"))
     val totals = merged.agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"),
       count(lit(1)).as("v"))
-    val withT = merged.crossJoin(broadcast(totals))
+    val withT = merged.crossJoin(totals)
     // ln(p/q) — one double ratio of exact integer products, quantized
     val lr = round(log(
       ((col("ca") + 1).cast("double") * (col("tb") + col("v")).cast("double")) /
@@ -234,7 +234,7 @@ object LmScore {
         coalesce(col("cb"), lit(0L)).as("cb"))
     val totals = merged.agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"),
       count(lit(1)).as("v"))
-    val withT = merged.crossJoin(broadcast(totals))
+    val withT = merged.crossJoin(totals)
     // un-normalized masses: p ∝ (a+1)(tb+V), q ∝ (b+1)(ta+V) — the
     // common denominator (ta+V)(tb+V) cancels inside the mixture ratio
     val pa = (col("ca") + 1).cast("double") * (col("tb") + col("v")).cast("double")

@@ -120,7 +120,7 @@ object Ranking {
       bucket, col(valueCol), col(idCol))
     val total = df.select(count(lit(1)).as("_n"))
     val wanted = explode(array(ps.map(lit(_)): _*))
-    ranked.crossJoin(broadcast(total.select(col("_n"), wanted.as("p"))))
+    ranked.crossJoin(total.select(col("_n"), wanted.as("p")))
       .where(col("rank") === ceil(col("p") * col("_n")).cast("long"))
       .select(col("p"), col(valueCol).as("value"))
   }
@@ -146,7 +146,7 @@ object Ranking {
     val total = df.select(count(lit(1)).as("_n"))
     // q = floor(N/n), r = N mod n; ranks 1..r*(q+1) land in the r wide
     // bins, the rest in narrow ones — all BIGINT, no doubles at the cut
-    ranked.crossJoin(broadcast(total))
+    ranked.crossJoin(total)
       .withColumn("bin", expr(
         s"""CASE WHEN rank <= (_n % $n) * (_n DIV $n + 1)
                  THEN (rank - 1) DIV (_n DIV $n + 1) + 1

@@ -629,7 +629,7 @@ object Sampling {
     val ranked = Ranking.globalRankBy(keyed,
       shiftright(col("_skey"), 48), col("_skey"), col(idCol))
     val n = ranked.agg(max(col("rank")).as("_n"))
-    val draws = ranked.crossJoin(broadcast(n))
+    val draws = ranked.crossJoin(n)
       .select(col(idCol), col("rank"), col("_n"),
         explode(expr(s"sequence(1, $k)")).as("neg_rank"))
       .withColumn("_cand", lit(1) + pmod(
@@ -695,7 +695,7 @@ object Sampling {
       .select(col("_f"), coalesce(col("_cr"), lit(0L)).as("_cr"),
         coalesce(col("_ct"), lit(0L)).as("_ct"))
     val totals = merged.agg(sum(col("_cr")).as("_tr"), sum(col("_ct")).as("_tt"))
-    val model = merged.crossJoin(broadcast(totals)) // 1-row scalar attach
+    val model = merged.crossJoin(totals)
       .select(col("_f"),
         round(log(
           ((col("_ct") + 1).cast("double") * (col("_tr") + lit(features.toLong)).cast("double")) /
@@ -893,7 +893,7 @@ object Sampling {
       s"train + embargo must leave room for test, got $trainNum/$trainDen + $embNum/$embDen")
     val bounds = df.agg(
       min(col(tsMicrosCol)).as("_tmin"), max(col(tsMicrosCol)).as("_tmax"))
-    df.crossJoin(broadcast(bounds))
+    df.crossJoin(bounds)
       .withColumn("_lo", col("_tmin") +
         expr(s"((_tmax - _tmin) * ${trainNum}L) DIV ${trainDen}L"))
       .withColumn("_hi", col("_lo") +

@@ -574,34 +574,6 @@ object Similarity {
     try f finally planLiteralBudget = saved
   }
 
-  /** Row budget for the probe-side ADC distance tables (`dtab`): they
-    * grow as queries × probes × m × ksub — query-BATCH-sized, so tiny at
-    * the gates (≤ thousands of rows) but unbounded in principle: a
-    * production 10k-query × 32-probe × m=8 × ksub=256 batch is ~650M
-    * rows, far past any broadcast limit. At or below the budget the
-    * candidate join broadcasts the table (~50 MB at 2²⁰ compact long
-    * rows — the right plan: only codes move, the corpus side never
-    * shuffles); above it the hint is dropped and the join falls back to
-    * a shuffle hash/sort-merge join on the same keys — same rows, same
-    * integers, bounded memory. The [[planLiteralBudget]] doctrine,
-    * applied to broadcast size instead of plan size.
-    * Test-only override via [[withBroadcastRowBudget]]. */
-  @volatile private[graft] var broadcastRowBudget: Long = 1L << 20
-
-  /** Scoped test override for [[broadcastRowBudget]] — same contract as
-    * [[withPlanLiteralBudget]]. */
-  private[graft] def withBroadcastRowBudget[T](b: Long)(f: => T): T = {
-    val saved = broadcastRowBudget
-    broadcastRowBudget = b
-    try f finally broadcastRowBudget = saved
-  }
-
-  /** Broadcast `df` when its (caller-computed, exact) row bound fits
-    * [[broadcastRowBudget]]; otherwise return it unhinted so the join
-    * planner picks a shuffle join. */
-  private def maybeBroadcast(df: DataFrame, rowBound: Long): DataFrame =
-    if (rowBound <= broadcastRowBudget) broadcast(df) else df
-
   /** Exact squared-L2 distance structs `(dist, c)` against plan-literal
     * centroids, sorted by cluster id; `array_min` of these breaks
     * distance ties to the SMALLEST cluster id. */
@@ -624,7 +596,7 @@ object Similarity {
     val one = Seq(cents.sortBy(_._1).toSeq
       .map { case (c, v) => (c.toLong, v.toSeq) })
       .toDF("_cents")
-    df.crossJoin(broadcast(one)) // 1-row scalar attach
+    df.crossJoin(broadcast(one)) // model row: may pass the size threshold by design
   }
 
   /** [[distStructsLiteral]] computed from the attached `_cents` column
@@ -976,7 +948,7 @@ object Similarity {
     // into each of its two field reads; explode(array(·)) pins each to
     // one evaluation (measured 8.7× on the q268 gate shape at sf1:
     // 74.1 → 8.5 s solo, the 10× ratio falling 7.0× → 2.7×)
-    df.crossJoin(broadcast(one)) // 1-row model attach
+    df.crossJoin(broadcast(one)) // model row: may pass the size threshold by design
       .withColumn("_g", explode(array(array_min(transform(col("_h"), s =>
           struct(d2(q, s.getField("_2")).as("dist"), s.getField("_1").as("g"))))
         .getField("g"))))
@@ -1330,13 +1302,13 @@ object Similarity {
     val probedIds = probed.select(col("cluster")).distinct()
       .collect().map(_.getLong(0)) // <= nCentroids values: model-sized
     // |Q|·probes probe rows, each carrying a dim-long query vector —
-    // broadcast the probe side iff its long count fits broadcastRowBudget
+    // broadcast the probe side iff its long count fits Broadcast.rowBudget
     // (the pruned postings scan then never shuffles); shuffle join above.
     val probeLongs = probed.count() * cents.headOption.fold(1)(_._2.length)
     val w = Window.partitionBy(col("_qid"))
       .orderBy(col("_dot").desc, col("id").asc)
     postings.where(col("cluster").isin(probedIds.toSeq: _*))
-      .join(maybeBroadcast(probed, probeLongs), Seq("cluster"))
+      .join(Broadcast.ifFits(probed, probeLongs), Seq("cluster"))
       .withColumn("_dot", aggregate(zip_with(col("_qq"), col("vec_q"),
         (a, b) => a * b), lit(0L), (acc, x) => acc + x))
       .withColumn("_rank", row_number().over(w))
@@ -1364,7 +1336,7 @@ object Similarity {
     * pipeline persists (n·m small ints instead of n·dim floats, the
     * 32× memory win that makes billion-vector serving possible).
     * Query: the distance TABLE is |Q|·m·ksub rows (query-batch-sized,
-    * broadcast iff it fits [[broadcastRowBudget]], shuffle-joined on the
+    * broadcast iff it fits [[Broadcast.rowBudget]], shuffle-joined on the
     * same keys above it); the scan explodes codes to (id, j, code) — n·m narrow
     * rows — equi-joins the table and partial-aggregates the m-term sum
     * per (query, id); the re-rank heap is a per-query window. Corpus
@@ -1397,7 +1369,7 @@ object Similarity {
     val codes = enc.select(col("_id").as("_nid"),
       posexplode(array((0 until m).map(j => col(s"_c$j")): _*)).as(Seq("_j", "_code")))
     // per-query distance table: |Q|·m·ksub rows — broadcast iff it fits
-    // broadcastRowBudget; codebook encoding picked by planLiteralBudget
+    // Broadcast.rowBudget; codebook encoding picked by planLiteralBudget
     val nQ = qpts.count() // one query-batch-sized job, no materialization
     val dtab = adcDistTable(qpts.select(col("_id").as("_qid"), col("_q")),
         books, col("_q"), dsub)
@@ -1405,7 +1377,7 @@ object Similarity {
     val w = Window.partitionBy(col("_qid"))
       .orderBy(col("_adc").asc, col("_nid").asc)
     codes
-      .join(maybeBroadcast(dtab, nQ * m * ksub), Seq("_j", "_code"))
+      .join(Broadcast.ifFits(dtab, nQ * m * ksub), Seq("_j", "_code"))
       .groupBy(col("_qid"), col("_nid"))
       .agg(sum(col("_d")).as("_adc"))
       .withColumn("_rank", row_number().over(w))
@@ -1442,7 +1414,7 @@ object Similarity {
       val spark = df.sparkSession
       import spark.implicits._
       val one = Seq(hd.map(_.toSeq).toSeq).toDF("_hd")
-      df.crossJoin(broadcast(one)) // 1-row scalar attach
+      df.crossJoin(broadcast(one)) // model row: may pass the size threshold by design
         .withColumn("_q", transform(sequence(lit(1), lit(dim)), i =>
           aggregate(zip_with(col("_q"), element_at(col("_hd"), i),
             (a, b) => a * b), lit(0L), (acc, x) => acc + x)))
@@ -1504,7 +1476,7 @@ object Similarity {
     * nCoarse·dim plan literals, budget-guarded). Encoding: m argmin
     * codes per row — the persisted index is (coarse bucket, m codes) per
     * vector. Query: distance tables are |Q|·probes·m·ksub rows
-    * (broadcast iff under [[broadcastRowBudget]], shuffle-joined on the
+    * (broadcast iff under [[Broadcast.rowBudget]], shuffle-joined on the
     * same keys above it); the candidate join keys on (bucket, j, code), so only
     * probed-bucket codes move and the fan-out is bounded by the probe
     * list, never the corpus; the m-term ADC sum partial-aggregates.
@@ -1531,7 +1503,7 @@ object Similarity {
       val spark = df.sparkSession
       import spark.implicits._
       val one = Seq(cents.sortBy(_._1).map(_._2.toSeq).toSeq).toDF("_carr")
-      df.crossJoin(broadcast(one)) // 1-row scalar attach
+      df.crossJoin(broadcast(one)) // model row: may pass the size threshold by design
         .withColumn(out,
           zip_with(q, element_at(col("_carr"), c.cast("int")), (a, b) => a - b))
         .drop("_carr")
@@ -1567,7 +1539,7 @@ object Similarity {
       val bookDf = books.zipWithIndex.flatMap { case (b, j) =>
         b.map { case (c, v) => (j, c.toLong, v.toSeq) } }
         .toDF("_j", "_code", "_bv")
-      src.crossJoin(broadcast(bookDf)) // m·ksub model rows
+      src.crossJoin(broadcast(bookDf)) // m·ksub model rows, past the threshold by design
         .withColumn("_d",
           aggregate(zip_with(slice(qr, col("_j") * dsub + 1, lit(dsub)),
             col("_bv"),
@@ -1631,7 +1603,7 @@ object Similarity {
     val w = Window.partitionBy(col("_qid"))
       .orderBy(col("_adc").asc, col("_nid").asc)
     codes // dtab bound: |Q|·probes·m·ksub rows exactly
-      .join(maybeBroadcast(dtab, nQ * probes * m * ksub), Seq("_c", "_j", "_code"))
+      .join(Broadcast.ifFits(dtab, nQ * probes * m * ksub), Seq("_c", "_j", "_code"))
       .groupBy(col("_qid"), col("_nid"))
       .agg(sum(col("_d")).as("_adc"))
       .withColumn("_rank", row_number().over(w))
@@ -1701,7 +1673,7 @@ object Similarity {
   /** PROBE: serve ADC top-k entirely from the two persisted tables —
     * the distance table comes from the persisted codebooks
     * (model-sized), only codes move, the broadcast is
-    * [[broadcastRowBudget]]-guarded. [[pqTopK]] tie semantics. */
+    * [[Broadcast.rowBudget]]-guarded. [[pqTopK]] tie semantics. */
   def pqRotatedProbeTopK(queries: DataFrame, codebooks: DataFrame,
                          codes: DataFrame, idCol: String, vecCol: String,
                          k: Int, seed: Long = 42L,
@@ -1722,7 +1694,7 @@ object Similarity {
     val w = Window.partitionBy(col("_qid"))
       .orderBy(col("_adc").asc, col("_nid").asc)
     exploded
-      .join(maybeBroadcast(dtab, nQ * m * ksub), Seq("_j", "_code"))
+      .join(Broadcast.ifFits(dtab, nQ * m * ksub), Seq("_j", "_code"))
       .groupBy(col("_qid"), col("_nid"))
       .agg(sum(col("_d")).as("_adc"))
       .withColumn("_rank", row_number().over(w))
@@ -1841,7 +1813,7 @@ object Similarity {
     val w = Window.partitionBy(col("_qid"))
       .orderBy(col("_adc").asc, col("_nid").asc)
     exploded
-      .join(maybeBroadcast(dtab.withColumn("_j", col("_j").cast("int")),
+      .join(Broadcast.ifFits(dtab.withColumn("_j", col("_j").cast("int")),
           nProbed * m * ksub),
         Seq("cluster", "_j", "_code"))
       .groupBy(col("_qid"), col("_nid"))

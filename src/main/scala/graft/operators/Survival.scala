@@ -47,7 +47,7 @@ object Survival {
     val wCum = Window.orderBy(col("_t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     hist
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("n_risk", col("_n") - coalesce(sum(col("_tot")).over(wBefore), lit(0L)))
       .where(col("_d") > 0L && col("n_risk") > col("_d"))
       // fixed shape: ln((n-d)/n) quantized once per event day
@@ -104,7 +104,7 @@ object Survival {
     val wBefore = Window.orderBy(col("_t"))
       .rowsBetween(Window.unboundedPreceding, -1)
     merged
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("_ra",
         col("_na") - coalesce(sum(col("_ta")).over(wBefore), lit(0L)))
       .withColumn("_rb",

@@ -534,7 +534,7 @@ private[graft] trait QueriesAssembly { this: SparkEntry.type =>
     val n = o.agg(sum(col("o")).as("_n"))
     spine.join(o, Seq("s"), "left")
       .select(col("s"), coalesce(col("o"), lit(0L)).as("o"))
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .select(expr(s"(CAST(o * $k - _n AS DECIMAL(38,0)) * (o * $k - _n) * 1000000) " +
         s"DIV ($k * CAST(_n AS DECIMAL(38,0)))").as("_t"), col("_n"))
       .groupBy(col("_n"))
@@ -1238,7 +1238,7 @@ private[graft] trait QueriesAssembly { this: SparkEntry.type =>
                END AS cs
              FROM base c JOIN candAll ON c.id = candAll.neighbor_id
              CROSS JOIN q),
-           rel AS (SELECT id, v, n, rel_u FROM scored
+           rel AS MATERIALIZED (SELECT id, v, n, rel_u FROM scored
                    ORDER BY cs DESC, id LIMIT 32),
            s1 AS (SELECT CAST(1 AS BIGINT) AS round, id, rel_u, CAST(0 AS BIGINT) AS ms
                   FROM rel ORDER BY rel_u DESC, id LIMIT 1),

@@ -209,7 +209,7 @@ private[graft] trait QueriesEvents { this: SparkEntry.type =>
       .join(purchase, Seq("user_id"), "left")
       .groupBy(col("user_id"), col("s_ms"))
       .agg(min(when(col("p_ms") >= col("s_ms"), col("p_ms"))).as("first_p"))
-      .crossJoin(broadcast(endMs))
+      .crossJoin(endMs)
       .select(
         when(col("first_p").isNotNull,
           expr("(first_p - s_ms) DIV 86400000"))
@@ -231,7 +231,7 @@ private[graft] trait QueriesEvents { this: SparkEntry.type =>
     val mx = du.agg(max(col("m")).as("_mx"))
     du.select(explode(sequence(col("m"), col("m") + lit(6L))).as("day"),
         col("user_id"))
-      .crossJoin(broadcast(mx))
+      .crossJoin(mx)
       .where(col("day") <= col("_mx"))
       .groupBy(col("day"))
       .agg(countDistinct(col("user_id")).as("n_active_7d"))
@@ -367,9 +367,9 @@ private[graft] trait QueriesEvents { this: SparkEntry.type =>
     * shift between the train era and the test era — the one-table drift
     * answer a split sign-off reads. */
   protected def q207(s: SparkSession, dir: String): DataFrame = {
-    val bounds = broadcast(Tables.events(s, dir)
+    val bounds = Tables.events(s, dir)
       .agg(min(unix_micros(col("ts"))).as("_mn"), max(unix_micros(col("ts"))).as("_mx"))
-      .select(expr("_mn + ((_mx - _mn) * 7) DIV 10").as("_mid")))
+      .select(expr("_mn + ((_mx - _mn) * 7) DIV 10").as("_mid"))
     val stamped = Tables.events(s, dir)
       .select(unix_micros(col("ts")).as("us"), cents(col("value")).as("vc"),
         expr("(unix_millis(ts) DIV 3600000) % 24").as("hod"))

@@ -117,7 +117,7 @@ private[graft] trait QueriesStats { this: SparkEntry.type =>
       unix_micros(col("ts")).as("us"))
     val mid = t.agg((min(col("us")) +
       expr("(max(us) - min(us)) DIV 2")).as("_mid"))
-    val stamped = t.crossJoin(broadcast(mid))
+    val stamped = t.crossJoin(mid)
     val ref = stamped.where(col("us") <= col("_mid")).select(col("v"), col("event_id"))
     val tgt = stamped.where(col("us") > col("_mid")).select(col("v"), col("event_id"))
     graft.operators.Checks.psiDrift(ref, tgt, "v", "event_id",
@@ -269,7 +269,7 @@ private[graft] trait QueriesStats { this: SparkEntry.type =>
     per
       .withColumn("cum_n", sum(col("n_rows")).over(wCum))
       .withColumn("cum_pos", sum(col("n_pos")).over(wCum))
-      .crossJoin(broadcast(tot))
+      .crossJoin(tot)
       .select(col("bin"), col("n_rows"), col("n_pos"), col("cum_pos"),
         // DECIMAL(38): cum_pos·N·10⁶ overflows BIGINT at corpus scale
         expr("((CAST(cum_pos AS DECIMAL(38,0)) * _tn * 1000000) DIV " +
@@ -421,7 +421,7 @@ private[graft] trait QueriesStats { this: SparkEntry.type =>
       .join(purchase, Seq("user_id"), "left")
       .groupBy(col("user_id"), col("s_ms"))
       .agg(min(when(col("p_ms") >= col("s_ms"), col("p_ms"))).as("first_p"))
-      .crossJoin(broadcast(endMs))
+      .crossJoin(endMs)
       .select(col("user_id"),
         when(col("first_p").isNotNull, expr("(first_p - s_ms) DIV 86400000"))
           .otherwise(expr("(end_ms - s_ms) DIV 86400000")).as("dur"),

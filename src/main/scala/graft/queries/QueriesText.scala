@@ -146,7 +146,7 @@ private[graft] trait QueriesText { this: SparkEntry.type =>
     val ranked = graft.operators.Ranking
       .globalRank(scored, "avg_unats", bucketWidth = 1000000L, "doc_id")
     ranked
-      .crossJoin(broadcast(ranked.agg(count(lit(1)).as("_n"))))
+      .crossJoin(ranked.agg(count(lit(1)).as("_n")))
       .withColumn("kept", col("rank") > expr("_n DIV 10"))
       .select(col("doc_id"), col("avg_unats"), col("rank"), col("kept"))
       .orderBy(col("rank"))
@@ -323,8 +323,7 @@ private[graft] trait QueriesText { this: SparkEntry.type =>
       "transform(sequence(1, length(w) - 1), i -> struct(substring(w, i, 1) AS a, substring(w, i + 1, 1) AS b))"))
       .as("p")).select(col("freq"), col("p.a").as("a"), col("p.b").as("b"))
     val top1 = topPair(pairs1)
-    val merged = words.crossJoin(broadcast(
-        top1.select(col("a").as("_ma"), col("b").as("_mb"))))
+    val merged = words.crossJoin(top1.select(col("a").as("_ma"), col("b").as("_mb")))
       .withColumn("_enc", regexp_replace(col("w"), "(.)", M + "$1" + M))
       .withColumn("_enc2", call_function("replace", col("_enc"),
         concat(lit(M), col("_ma"), lit(M), lit(M), col("_mb"), lit(M)),

@@ -38,7 +38,7 @@ object Tables {
     * testdata has shipped BOTH nanosecond parquet (which Spark 4's reader
     * rejects outright) and microsecond NTZ — so the unit is DETECTED from
     * the file's own declared schema (one driver-side footer read at plan
-    * time, no data pass):
+    * time, no data pass; the probed frame is the one returned):
     *  - µs NTZ: the session is pinned UTC, so the NTZ → instant cast is
     *    the identity mapping DuckDB applies to the same column;
     *  - µs/ms instant (e.g. a Spark re-write of the table): pass-through;
@@ -53,17 +53,16 @@ object Tables {
     * never do quietly. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    (scala.util.Try(spark.read.parquet(path).schema("ts").dataType) match {
-      case scala.util.Success(org.apache.spark.sql.types.TimestampNTZType) =>
-        spark.read.parquet(path).withColumn("ts", col("ts").cast("timestamp"))
-      case scala.util.Success(org.apache.spark.sql.types.TimestampType) =>
-        spark.read.parquet(path)
+    scala.util.Try { val df = spark.read.parquet(path); (df, df.schema("ts").dataType) } match {
+      case scala.util.Success((df, org.apache.spark.sql.types.TimestampNTZType)) =>
+        df.withColumn("ts", col("ts").cast("timestamp"))
+      case scala.util.Success((df, org.apache.spark.sql.types.TimestampType)) => df
       case _ =>
         spark.read
           .schema(eventsRawSchemaDdl)
           .parquet(path)
           .withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-    })
+    }
   }
   def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")

@@ -186,20 +186,18 @@ final class DataStream[A] private[graft] (private[graft] val df: DataFrame) {
   def limit(n: Int): DataStream[A] = new DataStream[A](df.limit(n))
 
   /** Equi-join on expression keys → stream of pairs. Catalyst picks the
-    * physical strategy (broadcast vs shuffle); pass `hintBroadcast = true`
-    * to force broadcasting the (small) right side.
+    * physical strategy (broadcast vs shuffle) from the sides' sizes.
     *
     * Semi/anti join types produce no right-side columns, so a pair-typed
     * result is unrepresentable — they are rejected here; use the correctly
     * typed [[semiJoin]]/[[antiJoin]] (returning `DataStream[A]`) instead. */
-  def join[B, K](other: DataStream[B], how: String = "inner", hintBroadcast: Boolean = false)(
+  def join[B, K](other: DataStream[B], how: String = "inner")(
       keyL: Expr[A, A] => Expr[A, K], keyR: Expr[B, B] => Expr[B, K]): DataStream[(A, B)] = {
     val normalized = how.toLowerCase.replace("_", "")
     require(!Set("semi", "leftsemi", "anti", "leftanti").contains(normalized),
       s"join type '$how' keeps only left rows — use semiJoin/antiJoin (typed DataStream[A])")
     val l = df.select(value.as("_l"))
-    val r0 = other.df.select(col(ValueCol).as("_r"))
-    val r = if (hintBroadcast) broadcast(r0) else r0
+    val r = other.df.select(col(ValueCol).as("_r"))
     val cond = keyL(Expr.id[A]).toColumn(col("_l")) === keyR(Expr.id[B]).toColumn(col("_r"))
     new DataStream[(A, B)](
       l.join(r, cond, how).select(struct(col("_l").as("_1"), col("_r").as("_2")).as(ValueCol)))
@@ -208,21 +206,20 @@ final class DataStream[A] private[graft] (private[graft] val df: DataFrame) {
   /** Semi join (SQL EXISTS): keep left elements with at least one key match
     * on the right. Right-side payloads never materialize, so the result is
     * the left element type. */
-  def semiJoin[B, K](other: DataStream[B], hintBroadcast: Boolean = false)(
+  def semiJoin[B, K](other: DataStream[B])(
       keyL: Expr[A, A] => Expr[A, K], keyR: Expr[B, B] => Expr[B, K]): DataStream[A] =
-    filteringJoin(other, "left_semi", hintBroadcast)(keyL, keyR)
+    filteringJoin(other, "left_semi")(keyL, keyR)
 
   /** Anti join (SQL NOT EXISTS): keep left elements with NO key match on the
     * right. */
-  def antiJoin[B, K](other: DataStream[B], hintBroadcast: Boolean = false)(
+  def antiJoin[B, K](other: DataStream[B])(
       keyL: Expr[A, A] => Expr[A, K], keyR: Expr[B, B] => Expr[B, K]): DataStream[A] =
-    filteringJoin(other, "left_anti", hintBroadcast)(keyL, keyR)
+    filteringJoin(other, "left_anti")(keyL, keyR)
 
-  private def filteringJoin[B, K](other: DataStream[B], how: String, hintBroadcast: Boolean)(
+  private def filteringJoin[B, K](other: DataStream[B], how: String)(
       keyL: Expr[A, A] => Expr[A, K], keyR: Expr[B, B] => Expr[B, K]): DataStream[A] = {
     val l = df.select(value.as("_l"))
-    val r0 = other.df.select(col(ValueCol).as("_r"))
-    val r = if (hintBroadcast) broadcast(r0) else r0
+    val r = other.df.select(col(ValueCol).as("_r"))
     val cond = keyL(Expr.id[A]).toColumn(col("_l")) === keyR(Expr.id[B]).toColumn(col("_r"))
     new DataStream[A](l.join(r, cond, how).select(col("_l").as(ValueCol)))
   }

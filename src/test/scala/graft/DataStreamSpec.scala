@@ -248,7 +248,7 @@ class DataStreamSpec extends SparkSuite {
     assert(a.intersect(b).collectValues == Seq(3L))
     assert(a.except(b).collectValues.sorted == Seq(1L, 2L))
     assert(a.sortBy(x => x, ascending = false).limit(2).collectValues == Seq(3L, 2L))
-    val joined = a.join(b, hintBroadcast = true)(x => x, y => y).collectValues
+    val joined = a.join(b)(x => x, y => y).collectValues
     assert(joined == Seq((3L, 3L)))
   }
 

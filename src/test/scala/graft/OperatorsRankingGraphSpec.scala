@@ -192,6 +192,29 @@ class OperatorsRankingGraphSpec extends SparkSuite {
     assert(plan.contains("PushedFilters") && plan.contains("doc_id"), plan)
   }
 
+  test("Tables.events: µs NTZ, instant and raw BIGINT-ns ts all read as the same UTC instants") {
+    import spark.implicits._
+    val micros = Seq(1700000000123456L, 1700003600000001L)
+    val base = micros.zipWithIndex.map { case (us, i) =>
+      (i.toLong, us, 7L, "view", 1.5, "{}") }
+      .toDF("event_id", "_us", "user_id", "event_type", "value", "props")
+    def cols(ts: org.apache.spark.sql.Column) = base.select(col("event_id"), ts.as("ts"),
+      col("user_id"), col("event_type"), col("value"), col("props"))
+    val root = java.nio.file.Files.createTempDirectory("graft-events").toString
+    val layouts = Seq(
+      "ntz" -> cols(timestamp_micros(col("_us")).cast("timestamp_ntz")),
+      "instant" -> cols(timestamp_micros(col("_us"))),
+      "raw_ns" -> cols(col("_us") * 1000L))
+    for ((name, df) <- layouts) {
+      df.write.parquet(s"$root/$name/events.parquet")
+      val read = graft.sources.Tables.events(spark, s"$root/$name")
+      assert(read.schema("ts").dataType == org.apache.spark.sql.types.TimestampType, name)
+      val got = read.orderBy(col("event_id")).select(unix_micros(col("ts")))
+        .collect().map(_.getLong(0)).toSeq
+      assert(got == micros, s"$name: $got")
+    }
+  }
+
   test("zOrderKey: hand-computed Morton interleave, bit i of col k at i*d+k") {
     import spark.implicits._
     val out = Seq((3L, 1L), (5L, 9L), (0L, 0L), (255L, 255L))
@@ -240,6 +263,20 @@ class OperatorsRankingGraphSpec extends SparkSuite {
     val out = graft.operators.Graph.triangleCount(edges, "src", "dst")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq((4L, 4L, 0L)))
+  }
+
+  test("triangleIncrement: shuffled degree join past the row budget == broadcast path") {
+    import spark.implicits._
+    // old triangle 1-2-3; fresh edges close 1-2-4, 1-3-4, 2-3-4, plus a
+    // pendant 4-5 and a re-delivered old edge (a no-op)
+    val old = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("src", "dst")
+    val fresh = Seq((4L, 1L), (2L, 4L), (3L, 4L), (4L, 5L), (2L, 1L)).toDF("src", "dst")
+    def run(): Seq[(Long, Long, Long)] = graft.operators.Graph
+      .triangleIncrement(old, fresh, "src", "dst")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val base = run()
+    assert(base == Seq((3L, 4L, 3L)))
+    assert(graft.operators.Broadcast.withRowBudget(0L)(run()) == base)
   }
 
   test("groupedQuantiles: type-1 rank selection per group, no single-partition window") {

@@ -921,10 +921,10 @@ class OperatorsSimilaritySpec extends SparkSuite {
 
   test("PQ/IVF-PQ budget fallbacks (codebook-in-data + shuffle-join dtab): bit-identical to the literal/broadcast path") {
     import spark.implicits._
-    import graft.operators.Similarity
+    import graft.operators.{Broadcast, Similarity}
     // Forcing planLiteralBudget = 0 routes the centroid-residual lookup
     // and the ADC distance-table construction through the broadcast
-    // model-table encodings; forcing broadcastRowBudget = 0 drops the
+    // model-table encodings; forcing Broadcast.rowBudget = 0 drops the
     // broadcast hint on every dtab/probe candidate join (shuffle join on
     // the same keys). Results must be IDENTICAL rows in all four
     // combinations — same integers, same tie-breaks.
@@ -959,19 +959,19 @@ class OperatorsSimilaritySpec extends SparkSuite {
     val base = all()
     val smallPlan = Similarity.withPlanLiteralBudget(0L)(all())
     assert(smallPlan == base, "codebook-in-data fallback must match literal path")
-    val noBcast = Similarity.withBroadcastRowBudget(0L)(all())
+    val noBcast = Broadcast.withRowBudget(0L)(all())
     assert(noBcast == base, "shuffle-join dtab must match broadcast path")
     val both = Similarity.withPlanLiteralBudget(0L)(
-      Similarity.withBroadcastRowBudget(0L)(all()))
+      Broadcast.withRowBudget(0L)(all()))
     assert(both == base, "combined fallbacks must match")
     // default budgets keep the tiny gate configs on the fast path:
     // m·ksub·dsub = 2·3·4 = 24 literals, dtab ≤ |Q|·probes·m·ksub = 48 rows
-    assert(24L <= Similarity.planLiteralBudget && 48L <= Similarity.broadcastRowBudget)
+    assert(24L <= Similarity.planLiteralBudget && 48L <= Broadcast.rowBudget)
   }
 
   test("pqRotatedTopK: Hadamard rotation exact algebra (orthogonal times d), budget fallback parity") {
     import spark.implicits._
-    import graft.operators.Similarity
+    import graft.operators.{Broadcast, Similarity}
     val dim = 8
     val hd = Similarity.hadamardSigns(dim, 7L)
     // rows of H·D are ±1, pairwise orthogonal, self-dot = dim
@@ -1003,7 +1003,7 @@ class OperatorsSimilaritySpec extends SparkSuite {
       .collect().map(_.toString).toSeq.sorted
     val base = run()
     val fb = Similarity.withPlanLiteralBudget(0L)(
-      Similarity.withBroadcastRowBudget(0L)(run()))
+      Broadcast.withRowBudget(0L)(run()))
     assert(fb == base, s"fallback must match literal path:\n$fb\n$base")
     assert(base.nonEmpty && base.length == 4 * 5)
   }
