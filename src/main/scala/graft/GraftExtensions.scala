@@ -7,7 +7,9 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Session extensions installing the engine's 8 native Catalyst functions
-  * under their SQL names and the as-of join planner strategy. [[Session]]
+  * under their SQL names, the as-of join planner strategy and the AQE rule
+  * that lets a small global sort skip range sampling
+  * ([[graft.plans.SmallSortExchange]]). [[Session]]
   * installs them on every session it builds; another builder adds them
   * with {{{ SparkSession.builder().withExtensions(new GraftExtensions) }}}
   * The DataFrame API builds the Catalyst nodes directly and needs no
@@ -47,6 +49,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new ExpressionInfo(classOf[BloomCountContained].getName, "graft_bloom_count"),
       GraftFunctions.buildBloomCount))
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    e.injectQueryStagePrepRule(graft.plans.SmallSortExchange)
   }
 }
 

@@ -599,6 +599,12 @@ object SparkEntry extends QueriesCore with QueriesDataflow with QueriesDedup wit
                  row_number() OVER (PARTITION BY vec_id ORDER BY dist, c) AS rn
                FROM distf_$j) t WHERE rn = 1)"""
     }
+    // every CTE of a WITH chain marked AS MATERIALIZED, so DuckDB computes
+    // each CTE once however often it is referenced; inlined, the PQ
+    // oracles (q232/q236/q238/q240) re-ran their cent/px/rot chains at
+    // every reference, minutes per query at sf0.01. The rows are the same
+  private[graft] def materializeCtes(sql: String): String =
+    sql.replace(" AS (", " AS MATERIALIZED (")
   private[graft] def pqSlicePx(j: Int, dsub: Int, src: String) =
       s"""SELECT vec_id,
              unnest(list_slice(q, ${j * dsub + 1}, ${j * dsub + dsub})) AS x,

@@ -299,7 +299,7 @@ private[graft] trait QueriesAnn { this: SparkEntry.type =>
       // persisted rotated-PQ lifecycle: q238's rotation CTE + subspace
       // chains with trainers (seeds + tpx) restricted to the initial
       // corpus while af_j assigns every row — build + frozen append
-      "q240_pq_rotated_lifecycle" -> {
+      "q240_pq_rotated_lifecycle" -> materializeCtes {
         val m = 4; val dsub = 16; val ksub = 4; val rounds = 2; val topk = 10
         val hd = graft.operators.Similarity.hadamardSigns(64, 42L)
         val rows = (0 until 64).map { i =>
@@ -485,7 +485,7 @@ private[graft] trait QueriesAnn { this: SparkEntry.type =>
       // subspace chains' tpx) while a_f/af_j assign every row — exactly
       // build + frozen-model append; queries %50; persistence cannot
       // change the integers
-      "q236_ivf_pq_lifecycle" -> {
+      "q236_ivf_pq_lifecycle" -> materializeCtes {
         val m = 4; val dsub = 16; val ksub = 4; val rounds = 2
         val probes = 2; val topk = 10
         val tp = "vec_id % 7 <> 0"
@@ -568,7 +568,7 @@ private[graft] trait QueriesAnn { this: SparkEntry.type =>
       // — the same ±1 H·D rows the Spark side builds (same seed), spelled
       // out as 64 list elements of 64 signed terms each; everything
       // downstream identical
-      "q238_pq_rotated" -> {
+      "q238_pq_rotated" -> materializeCtes {
         val m = 4; val dsub = 16; val ksub = 4; val rounds = 2; val topk = 10
         val hd = graft.operators.Similarity.hadamardSigns(64, 42L)
         val rows = (0 until 64).map { i =>
@@ -607,7 +607,7 @@ private[graft] trait QueriesAnn { this: SparkEntry.type =>
       // residuals rpx = x − centroid(x) feed four subspace chains, the
       // query probes 2 buckets and builds one ADC table per probed
       // bucket from ITS residual; candidates key on (bucket, code)
-      "q232_ivf_pq" -> {
+      "q232_ivf_pq" -> materializeCtes {
         val m = 4; val dsub = 16; val ksub = 4; val rounds = 2
         val probes = 2; val topk = 10
         def resPx(j: Int) =

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.FooterSchema
 import org.apache.spark.sql.functions._
 
 /** Parquet table loaders for the TPC-H-ish test corpus (TESTDATA.md).
@@ -8,17 +9,29 @@ import org.apache.spark.sql.functions._
   * The reference's only source is `fromLiterals` (reference:
   * src/main/scala/zio/analytics/DataStream.scala:87-88); file sources are one
   * of the capability categories our engine must supply (SURVEY.md §2.4).
-  * Plain `spark.read.parquet` is deliberately the whole implementation:
-  * Catalyst then owns predicate pushdown, column pruning and partition
-  * pruning on the scan, which is exactly what we want at 100 TB — never
-  * materialize-then-filter. */
+  * A table is a plain `spark.read.parquet` scan, so Catalyst owns predicate
+  * pushdown, column pruning and partition pruning, which is exactly what we
+  * want at 100 TB — never materialize-then-filter. The one addition is how
+  * the schema is found: for a single-file table [[read]] converts the
+  * file's footer on the driver and hands Spark the schema, where inference
+  * would launch a one-task job per read. */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    read(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema read from the footer on the
+    * driver when `path` is a plain file (no inference job). A directory, or
+    * a footer that cannot be read, falls back to Spark's own inference.
+    * Nothing is cached: every read sees the file as it is now. */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    FooterSchema.of(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
 
   def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
@@ -38,7 +51,8 @@ object Tables {
     * testdata has shipped BOTH nanosecond parquet (which Spark 4's reader
     * rejects outright) and microsecond NTZ — so the unit is DETECTED from
     * the file's own declared schema (one driver-side footer read at plan
-    * time, no data pass; the probed frame is the one returned):
+    * time through [[read]], no job and no data pass; the probed frame is
+    * the one returned):
     *  - µs NTZ: the session is pinned UTC, so the NTZ → instant cast is
     *    the identity mapping DuckDB applies to the same column;
     *  - µs/ms instant (e.g. a Spark re-write of the table): pass-through;
@@ -53,7 +67,7 @@ object Tables {
     * never do quietly. */
   def events(spark: SparkSession, dir: String): DataFrame = {
     val path = s"$dir/events.parquet"
-    scala.util.Try { val df = spark.read.parquet(path); (df, df.schema("ts").dataType) } match {
+    scala.util.Try { val df = read(spark, path); (df, df.schema("ts").dataType) } match {
       case scala.util.Success((df, org.apache.spark.sql.types.TimestampNTZType)) =>
         df.withColumn("ts", col("ts").cast("timestamp"))
       case scala.util.Success((df, org.apache.spark.sql.types.TimestampType)) => df

@@ -36,11 +36,13 @@ object Replay {
     * the caller's conf is copied over explicitly — cloneSession semantics
     * without the private API. Memoized so concurrent gate queries
     * (Verify's thread pool) share one clone instead of spawning session
-    * machinery per replay. */
-  private val sessions =
-    new java.util.concurrent.ConcurrentHashMap[SparkSession, SparkSession]()
+    * machinery per replay. Weak-keyed: the clone holds no reference to its
+    * parent, so once a parent is unreachable its entry and clone can be
+    * collected, and the map never grows past the live parents. */
+  private val sessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
 
-  private def replaySession(parent: SparkSession): SparkSession =
+  private[graft] def replaySession(parent: SparkSession): SparkSession =
     sessions.computeIfAbsent(parent, p => {
       val rs = p.newSession()
       p.conf.getAll.foreach { case (k, v) =>

@@ -215,6 +215,51 @@ class OperatorsRankingGraphSpec extends SparkSuite {
     }
   }
 
+  test("Tables: a single-file source reads its schema from the footer on the driver, with no job") {
+    import graft.sources.Tables
+    import org.apache.spark.graft.JobCount
+    val inferred = Tables.names.map(n => n -> spark.read.parquet(s"$sf0001/$n.parquet").schema)
+    val (read, jobs) = JobCount.of(spark.sparkContext) {
+      Tables.names.map(n => n -> Tables(spark, sf0001, n).schema) :+
+        ("events via Tables.events" -> Tables.events(spark, sf0001).schema)
+    }
+    assert(jobs == 0, s"resolving ${read.size} sources ran $jobs jobs")
+    assert(read.init == inferred)
+    assert(read.last._2.map(_.name) == inferred.toMap.apply("events").map(_.name))
+
+    // a Spark-written file carries Spark's row metadata in its footer
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft-footer")
+    val written = Seq((1L, "a", 1.5, Seq(1, 2)), (2L, null, -0.25, Seq.empty[Int]))
+      .toDF("id", "s", "x", "xs")
+      .select(col("id").cast("short").as("id"), col("s"), col("x").cast("decimal(9,3)").as("x"),
+        col("xs"), timestamp_micros(col("id")).as("ts"))
+      .coalesce(1)
+    written.write.parquet(s"$root/written")
+    val part = java.nio.file.Files.list(root.resolve("written")).toArray
+      .map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith(".parquet")).toSeq
+    assert(part.size == 1)
+    java.nio.file.Files.createDirectories(root.resolve("flat"))
+    java.nio.file.Files.move(part.head, root.resolve("flat/t.parquet"))
+    val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$root/flat/t.parquet"), spark.sparkContext.hadoopConfiguration))
+    try assert(footer.getFooter.getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.sql.parquet.row.metadata"))
+    finally footer.close()
+    val (flat, flatJobs) = JobCount.of(spark.sparkContext)(Tables(spark, s"$root/flat", "t").schema)
+    assert(flatJobs == 0)
+    assert(flat == spark.read.parquet(s"$root/flat/t.parquet").schema)
+    assert(Tables(spark, s"$root/flat", "t").collect().length == 2)
+
+    // a directory table falls back to Spark's inference job
+    written.write.parquet(s"$root/dir.parquet")
+    val (dir, dirJobs) = JobCount.of(spark.sparkContext)(Tables(spark, root.toString, "dir").schema)
+    assert(dirJobs >= 1, "a directory goes through inference")
+    assert(dir == spark.read.parquet(s"$root/dir.parquet").schema)
+  }
+
   test("zOrderKey: hand-computed Morton interleave, bit i of col k at i*d+k") {
     import spark.implicits._
     val out = Seq((3L, 1L), (5L, 9L), (0L, 0L), (255L, 255L))

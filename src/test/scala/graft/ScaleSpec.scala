@@ -1539,5 +1539,41 @@ class ScaleSpec extends SparkSuite {
     // and the gated query itself stays green end to end
     assert(SparkEntry.queries("q189_info_gain")(spark, sf0001).count() == 3L)
   }
-}
 
+  test("a global sort of a small computed input skips range sampling: one range partition, one job fewer") {
+    import org.apache.spark.graft.JobCount
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val sorted = () => spark.range(0, 2000)
+      .select((col("id") % 37).as("k"), col("id").as("v"))
+      .groupBy(col("k")).agg(sum(col("v")).as("s"))
+      .orderBy(col("s").desc, col("k"))
+    def run(): (Seq[org.apache.spark.sql.Row], Int, String) = {
+      val df = sorted()
+      val (rows, jobs) = JobCount.of(spark.sparkContext)(df.collect().toSeq)
+      (rows, jobs, finalPlan(df))
+    }
+    val (rows, jobs, plan) = run()
+    val prev = spark.conf.get(advisory)
+    val (tinyRows, tinyJobs, tinyPlan) =
+      try { spark.conf.set(advisory, "1"); run() } finally spark.conf.set(advisory, prev)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
+    assert("""rangepartitioning\([^\n]*, 1\), ENSURE_REQUIREMENTS""".r.findFirstIn(plan).isDefined, plan)
+    assert(s"""rangepartitioning\\([^\\n]*, $parts\\), ENSURE_REQUIREMENTS""".r
+      .findFirstIn(tinyPlan).isDefined, tinyPlan)
+    assert(jobs == tinyJobs - 1, s"jobs: $jobs with the rule, $tinyJobs past the advisory size")
+    assert(rows.size == 37 && rows == tinyRows)
+  }
+
+  test("a user repartitionByRange keeps its partition count") {
+    val df = spark.range(0, 2000)
+      .select((col("id") % 37).as("k"), col("id").as("v"))
+      .groupBy(col("k")).agg(sum(col("v")).as("s"))
+      .repartitionByRange(8, col("s"))
+    assert(df.rdd.getNumPartitions == 8)
+    assert(finalPlan(df).contains(", 8), REPARTITION_BY_NUM"), finalPlan(df))
+  }
+
+  /** The adaptive plan as executed, without its `== Initial Plan ==` part. */
+  private def finalPlan(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString.split("== Initial Plan ==").head
+}

@@ -39,6 +39,17 @@ class StreamingSpec extends SparkSuite {
     } finally q.stop()
   }
 
+  test("Replay: one memoized clone per parent session, and a new session gets its own") {
+    val clone = graft.streaming.Replay.replaySession(spark)
+    assert(graft.streaming.Replay.replaySession(spark) eq clone)
+    assert(!(clone eq spark))
+    assert(clone.conf.get("spark.sql.shuffle.partitions") == "4")
+    val parent = spark.newSession()
+    val other = graft.streaming.Replay.replaySession(parent)
+    assert(!(other eq clone) && !(other eq parent))
+    assert(graft.streaming.Replay.replaySession(parent) eq other)
+  }
+
   test("streaming calendar rollup: hour buckets flush on watermark, late rows dropped") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
