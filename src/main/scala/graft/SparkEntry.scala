@@ -599,10 +599,10 @@ object SparkEntry extends QueriesCore with QueriesDataflow with QueriesDedup wit
                  row_number() OVER (PARTITION BY vec_id ORDER BY dist, c) AS rn
                FROM distf_$j) t WHERE rn = 1)"""
     }
-    // every CTE of a WITH chain marked AS MATERIALIZED, so DuckDB computes
-    // each CTE once however often it is referenced; inlined, the PQ
-    // oracles (q232/q236/q238/q240) re-ran their cent/px/rot chains at
-    // every reference, minutes per query at sf0.01. The rows are the same
+  // every CTE of a WITH chain marked AS MATERIALIZED, so DuckDB computes
+  // each CTE once however often it is referenced; inlined, the PQ
+  // oracles (q232/q236/q238/q240) re-ran their cent/px/rot chains at
+  // every reference, minutes per query at sf0.01. The rows are the same.
   private[graft] def materializeCtes(sql: String): String =
     sql.replace(" AS (", " AS MATERIALIZED (")
   private[graft] def pqSlicePx(j: Int, dsub: Int, src: String) =
